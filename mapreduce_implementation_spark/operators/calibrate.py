@@ -45,7 +45,6 @@ def calibrate_corpus(
     rows: int = 4,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     cap_strategy: str = "window",
-    sig_hash: str = "md5",
     shingle_impl: str = "string",
     n_sample: int = 300,
     skew_top_n: int = 5,
@@ -132,9 +131,7 @@ def calibrate_corpus(
     ``CorpusPipelineConfig(calibration=...)`` builds at the
     recommended family with zero extra jobs. With an EXPLICIT family
     the recommendation is advisory: a warning says when the other
-    family measured better (recalibrate with ``"auto"`` to adopt).
-    ``sig_hash != "md5"`` pins the string family (tokhash never
-    strong-hashes shingle strings), so ``"auto"`` is refused there."""
+    family measured better (recalibrate with ``"auto"`` to adopt)."""
     from mapreduce_implementation_spark.functions.textstats import (
         quality_score,
         quality_threshold_for_retention,
@@ -152,12 +149,6 @@ def calibrate_corpus(
         raise ValueError(
             f"shingle_impl must be string|tokhash|auto, got {shingle_impl!r}"
         )
-    if shingle_impl == "auto" and sig_hash != "md5":
-        raise ValueError(
-            "shingle_impl='auto' cannot adopt tokhash under a "
-            "non-default sig_hash (tokhash never strong-hashes shingle "
-            "strings) — pin shingle_impl='string'"
-        )
     warnings: list[str] = []
 
     # 0) shingle-family recommendation (round-16 verdict item 2): price
@@ -165,7 +156,7 @@ def calibrate_corpus(
     # run the rest of the calibration under the winner
     shingle_section: dict | None = None
     inset_by_arm: dict = {}
-    if (recommend_shingle or shingle_impl == "auto") and sig_hash == "md5":
+    if recommend_shingle or shingle_impl == "auto":
         shingle_section, inset_by_arm = _probe_shingle_families(
             docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
             k=k, bands=bands, rows=rows, threshold=threshold,
@@ -187,11 +178,6 @@ def calibrate_corpus(
                 f"{shingle_impl!r} — recalibrate with "
                 "shingle_impl='auto' to adopt it"
             )
-    elif recommend_shingle:
-        warnings.append(
-            "shingle-family recommendation skipped: sig_hash="
-            f"{sig_hash!r} pins the string family"
-        )
 
     # 1) quality floor from the retention target (t-digest corpus pass)
     floor = quality_threshold_for_retention(
@@ -219,7 +205,7 @@ def calibrate_corpus(
             return minhash_near_dup_pairs(
                 s, id_col, text_col, shingle_n=shingle_n, k=k, bands=bands,
                 rows=rows, threshold=threshold, max_bucket=max_bucket,
-                sig_hash=sig_hash, shingle_impl=shingle_impl,
+                shingle_impl=shingle_impl,
             )
 
         inset = miner_recall_probe(
@@ -231,11 +217,11 @@ def calibrate_corpus(
     def cross(new: DataFrame, ref: DataFrame) -> DataFrame:
         new_sigs = minhash_signatures(
             new, id_col, text_col, shingle_n=shingle_n, k=k,
-            hash=sig_hash, shingle_impl=shingle_impl,
+            shingle_impl=shingle_impl,
         )
         ref_sigs = minhash_signatures(
             ref, id_col, text_col, shingle_n=shingle_n, k=k,
-            hash=sig_hash, shingle_impl=shingle_impl,
+            shingle_impl=shingle_impl,
         )
         return minhash_cross_near_dup(
             new_sigs, ref_sigs, k=k, bands=bands, rows=rows,
@@ -256,7 +242,7 @@ def calibrate_corpus(
     banded = _minhash_banded(
         minhash_signatures(
             docs, id_col, text_col, shingle_n=shingle_n, k=k,
-            hash=sig_hash, shingle_impl=shingle_impl,
+            shingle_impl=shingle_impl,
         ),
         "doc_id", bands, rows,
     )
@@ -340,10 +326,10 @@ def calibrate_corpus(
             "k": k, "bands": bands, "rows": rows,
             "shingle_n": shingle_n, "threshold": threshold,
             # the signature FAMILY the distribution was measured under
-            # (ADVICE r14): a build at a different sig_hash/shingle_impl
-            # has different band-bucket counts, so the miner's knob
-            # check raises on mismatch like the structural knobs
-            "sig_hash": sig_hash, "shingle_impl": shingle_impl,
+            # (ADVICE r14): a build at a different shingle_impl has
+            # different band-bucket counts, so the miner's knob check
+            # raises on mismatch like the structural knobs
+            "shingle_impl": shingle_impl,
             "max_bucket": max_bucket, "cap_strategy": cap_strategy,
             "pair_screen": screen, "mean_bucket_size": mean_bucket,
             "oversized_rows": int(big_rows),

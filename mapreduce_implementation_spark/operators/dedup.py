@@ -153,39 +153,25 @@ PERM_B = [_rng.randrange(0, MERSENNE_P) for _ in range(64)]
 del _rng
 
 
-def shingle_ints(shingle_col: Column, hash: str = "md5") -> Column:
+def shingle_ints(shingle_col: Column) -> Column:
     """Hash each shingle ONCE to an int in [0, 2^31-1). This is the
     expensive step — everything downstream is cheap arithmetic.
 
-    ``hash="md5"`` (default): first 15 hex chars of md5 parsed as int,
-    reduced mod the Mersenne prime — the ORACLE hash (DuckDB replays
-    it bit-for-bit via its own md5/conv, plans/dedup_queries.py).
-    ``hash="xxhash64"`` (round-14 verdict item 3): the JVM-intrinsic
-    64-bit xxHash reduced mod the same prime — cheaper per shingle
-    (no hex round-trip, no crypto rounds), same [0, p) domain so
-    every downstream permutation / banding / estimation step is
-    unchanged. MEASURED NEGATIVE at the build level (BASELINE.md
-    r14): the strong hash is only ~1 s of the ~30 s 1M-doc signature
-    chain — tokenize + ngram + array_distinct own ~20 s — so the
-    swap is a ~2% wash and md5 stays the default everywhere (the r13
-    'md5 dominates the chain' reading of the arrow-wash was wrong:
-    the SHARED scan chain dominates). Signatures from the two hashes
-    are mutually incompatible (different min-wise draws): both sides
-    of any cross-set/banded join must agree, and DuckDB cannot
-    replay Spark's xxhash64 seed — oracle rows stay on md5."""
-    if hash == "md5":
-        return F.transform(
-            shingle_col,
-            lambda g: F.conv(
-                F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10
-            ).cast("long")
-            % MERSENNE_P,
-        )
-    if hash == "xxhash64":
-        return F.transform(
-            shingle_col, lambda g: F.pmod(F.xxhash64(g), F.lit(MERSENNE_P))
-        )
-    raise ValueError(f"hash must be 'md5' or 'xxhash64', got {hash!r}")
+    First 15 hex chars of md5 parsed as int, reduced mod the Mersenne
+    prime — the ORACLE hash (DuckDB replays it bit-for-bit via its own
+    md5/conv, plans/dedup_queries.py). A cheaper strong hash is no
+    lever here: the round-14 decomposition measured md5 at ~1 s of the
+    ~30 s 1M-doc signature chain — tokenize + ngram + array_distinct
+    own ~20 s (BASELINE.md r14) — which is why the cheaper-per-row
+    family is :func:`shingle_ints_from_token_hashes`, not another hash
+    over the same strings."""
+    return F.transform(
+        shingle_col,
+        lambda g: F.conv(
+            F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10
+        ).cast("long")
+        % MERSENNE_P,
+    )
 
 
 def token_hash_ints(toks: Column) -> Column:
@@ -209,9 +195,9 @@ def shingle_ints_from_token_hashes(
     ~1 s). Each n-gram hashes as xxhash64 over the n-long int64 slice
     of ``th``; ``mod_p`` reduces into [0, MERSENNE_P) — the MinHash
     permutation domain (same SHAPE as :func:`shingle_ints`, different
-    VALUES: tokhash is a third signature family, mutually incompatible
-    with md5/xxhash64-over-strings builds — both sides of any banded or
-    cross-set join must agree). ``mod_p=False`` keeps the full 64-bit
+    VALUES: tokhash is its own signature family, incompatible with the
+    md5-over-strings build — both sides of any banded or cross-set
+    join must agree). ``mod_p=False`` keeps the full 64-bit
     domain for set-membership uses (exact-Jaccard rides, winnowing
     fingerprints) where the tighter 2³¹ domain would raise the
     within-doc collision rate for no benefit. Token arrays shorter
@@ -548,7 +534,12 @@ def minhash_band_stats(
     * ``screen_stats.json`` — the choose_pair_screen moments
       (small_rows/small_groups/big_rows) plus the banding knobs, so a
       foreign (bands, rows, max_bucket) can never answer for this
-      table (the miner validates, same rule as ``calibration=``).
+      table (the miner validates, same rule as ``calibration=``), and
+      the table's commit fingerprint (:func:`_table_fingerprint`), so
+      a table REBUILT at the same path never inherits the old
+      sidecar's answers (a stale ``big_rows == 0`` would elide the cap
+      over a bucket that is now oversized). Either mismatch raises on
+      reload.
     * ``band_counts/`` (parquet) — the per-key counts frame, written
       ONLY when an oversized bucket exists (``big_rows > 0``): it is
       the cap/slice detection input. The common no-oversized corpus
@@ -603,6 +594,7 @@ def minhash_band_stats(
 
     meta_path = os.path.join(sidecar_dir, "screen_stats.json")
     counts_path = os.path.join(sidecar_dir, "band_counts")
+    fingerprint = _table_fingerprint(sigs)
     if os.path.exists(meta_path):
         with open(meta_path) as f:
             meta = json.load(f)
@@ -614,6 +606,12 @@ def minhash_band_stats(
                 f"bands={meta.get('bands')} rows={meta.get('rows')} "
                 f"max_bucket={meta.get('max_bucket')}, not the requested "
                 f"({bands}, {rows}, {max_bucket}) — rebuild the sidecar"
+            )
+        if meta.get("fingerprint") != fingerprint:
+            raise ValueError(
+                f"band-stats sidecar at {sidecar_dir} was built over "
+                "other committed files than the signature table now "
+                "holds (rebuilt at the same path?) — rebuild the sidecar"
             )
         stats = meta.get("screen_stats")
         counts = (
@@ -647,7 +645,7 @@ def minhash_band_stats(
         json.dump(
             {
                 "bands": bands, "rows": rows, "max_bucket": max_bucket,
-                "screen_stats": stats,
+                "screen_stats": stats, "fingerprint": fingerprint,
             },
             f,
         )
@@ -655,6 +653,29 @@ def minhash_band_stats(
         "bands": bands, "rows": rows, "max_bucket": max_bucket,
         "screen_stats": stats, "counts": counts,
     }
+
+
+def _table_fingerprint(sigs: DataFrame) -> list:
+    """Sorted [file URI, byte size] pairs of the files ``sigs`` scans —
+    ``inputFiles()`` plus local stat calls, driver-side, no Spark job.
+    A rewrite at the same path commits new part-file names (each write
+    job stamps its id into them), so the fingerprint of a rebuilt table
+    never matches the previous commit's. Sizes of non-local URIs are
+    None: the names alone still change per commit."""
+    import os
+    from urllib.parse import urlparse
+
+    out = []
+    for uri in sigs.inputFiles():
+        parsed = urlparse(uri)
+        size = None
+        if parsed.scheme in ("", "file"):
+            try:
+                size = os.path.getsize(parsed.path or uri)
+            except OSError:
+                pass
+        out.append([uri, size])
+    return sorted(out)
 
 
 def _validate_rep_params(cap_strategy: str, n_representatives: int) -> None:
@@ -1106,8 +1127,6 @@ def minhash_signatures(
     *,
     shingle_n: int = 3,
     k: int = 16,
-    impl: str | None = None,
-    hash: str = "md5",
     shingle_impl: str = "string",
     with_bands: tuple[int, int] | None = None,
 ) -> DataFrame:
@@ -1122,36 +1141,43 @@ def minhash_signatures(
     evaluations per build otherwise — counts job + both self-join
     sides). Value-identical to the runtime form by construction.
 
-    ``hash`` picks the strong per-shingle hash (see
-    :func:`shingle_ints`): ``"md5"`` is the oracle-replayable default
-    — the round-14 decomposition measured the strong hash at ~1 s of
-    the ~30 s 1M-doc chain, so ``"xxhash64"`` is a ~2% wash at the
-    build level (BASELINE.md r14), kept as the option for engines
-    whose md5 is costlier. The min-wise uniformity argument is
-    hash-agnostic; recall parity is probe-pinned. Signatures from
-    different hashes never mix: band joins require both sides built
-    with the same ``hash``.
-
-    ``shingle_impl`` (round-15 verdict item 1) picks how shingle ints
-    are produced:
+    ``shingle_impl`` (round-15 verdict item 1) picks the signature
+    FAMILY, and the family fixes the kernel — one production path
+    each:
 
     * ``"string"`` (default, the oracle arm): tokens → n-gram CONCAT
-      STRINGS → ``array_distinct`` over strings → strong hash per
-      string (``hash``). DuckDB replays this bit-for-bit.
+      STRINGS → ``array_distinct`` over strings → md5 per string
+      (:func:`shingle_ints`) → the k permutation mins, all as JVM HOF
+      expressions (``array_min(transform(...))``). DuckDB replays this
+      bit-for-bit. A mapInPandas fold of the k permutations over the
+      same shingle ints was a MEASURED WASH both times it was
+      adjudicated (r13 string chain: expr 30.97 s vs 31.25 s at 1M
+      docs; r16 tokhash chain: 19.52 vs 19.84 s — BASELINE.md): the
+      fold is only ~3.3 s of the build, so vectorizing IT cannot pay
+      for the shingle-int Arrow transfer.
     * ``"tokhash"`` (the production recommendation at scale): tokens
-      → xxhash64 per token → shingle int64 = xxhash64 over each
-      n-long token-hash slice, distinct over fixed-width longs — no
-      shingle string is ever materialized and no per-string strong
-      hash runs (see :func:`shingle_ints_from_token_hashes`; the
-      measured r14 decomposition puts ~20.5 s of the ~31 s 1M-doc
-      build in exactly the stages this skips). ``hash`` must stay at
-      its default — there are no shingle strings to strong-hash —
-      and the resulting signatures are a THIRD family, incompatible
-      with either string-hash build (both sides of any banded or
-      cross-set join must use the same ``shingle_impl``). Recall /
-      precision parity vs md5 is probe-pinned
+      → xxhash64 per token on the JVM → ONE fused mapInArrow kernel
+      (:func:`_minhash_sig_fused`) that replays Spark's
+      ``xxhash64``-over-slice shingle chain bit-for-bit in
+      wrapping-uint64 numpy AND folds the permutations. No shingle
+      string is ever materialized, no per-string strong hash runs
+      (the r14 decomposition puts ~20.5 s of the ~31 s 1M-doc build
+      in exactly the stages this skips), and the dominant ~16 s JVM
+      slice-hash HOF stage never runs. Measured fresh-process
+      interleaved min-of-3 at 1M docs (BASELINE.md r16): **1.76×**
+      over the expression chain in the mapInPandas form (20.82 →
+      11.80 s) and **2.36×** in the mapInArrow form (8.82 s),
+      digest-identical on every line. The signatures are their own
+      family, incompatible with the string build (both sides of any
+      banded or cross-set join must use the same ``shingle_impl``).
+      Recall / precision parity vs md5 is probe-pinned
       (tests/test_minhash_hash.py) — min-wise sampling quality does
-      not depend on which injective map drew the shingle ints.
+      not depend on which injective map drew the shingle ints. The
+      expression reference for this family is the public-helper
+      composition :func:`token_hash_ints` →
+      :func:`shingle_ints_from_token_hashes` →
+      :func:`minhash_signature_from_ints`; the kernel is pinned
+      digest-equal to it.
 
     Don't pick by hand: ``calibrate_corpus(shingle_impl="auto")`` —
     the ``calibrate`` CLI's default — prices both families on YOUR
@@ -1170,60 +1196,16 @@ def minhash_signatures(
     drags the whole shingle/md5 expression chain into the single
     pre-shuffle scan task (serializing it 32×) and evaluates it twice.
     Shingle-less docs instead yield a NULL signature (the F.when in
-    minhash_signature_from_ints), which the band explode drops.
+    minhash_signature_from_ints, the valid-mask in the fused kernel),
+    which the band explode drops.
 
-    ``impl``: ``None`` (default) auto-selects the measured winner for
-    the chosen family — ``"fused"`` under tokhash, ``"expr"`` under
-    string. The three explicit values:
-
-    * ``"expr"`` evaluates shingle ints AND the k permutation mins as
-      JVM HOF expressions (``array_min(transform(...))``) — the
-      string-family default and the oracle-replayable arm.
-    * ``"arrow"`` keeps the JVM shingle-int stage but folds the k
-      permutations per Arrow batch (k vectorized ``(a·x + b) mod p``
-      passes + ``np.minimum.reduceat``). A MEASURED WASH both times it
-      was adjudicated (r13 string chain: expr 30.97 s vs arrow
-      31.25 s at 1M docs, arrow 0.72× under contention; r16 tokhash
-      chain: 19.52 vs 19.84 s — BASELINE.md r16): the fold is only
-      ~3.3 s of the tokhash build, so vectorizing IT cannot pay for
-      the shingle-int Arrow transfer. Kept as the A/B reference arm.
-    * ``"fused"`` (tokhash only; the production default via ``None``)
-      goes one stage earlier: the Arrow transfer carries the
-      TOKEN-HASH arrays and one mapInPandas kernel replays Spark's
-      ``xxhash64``-over-slice chain bit-for-bit in wrapping-uint64
-      numpy AND folds the permutations — the dominant ~16 s JVM
-      slice-hash HOF stage (one array allocation per n-gram position,
-      outside whole-stage codegen) never runs. Same signature family,
-      same digests (parity pytest-pinned). Measured fresh-process
-      interleaved min-of-3 at 1M docs (BASELINE.md r16, continued):
-      expr 20.82 s vs fused 11.80 s = **1.76×**, digest-identical on
-      every line.
-
-    Parity is exact across all three (every operand an integer — no
-    rounding exists in this arithmetic; the fused kernel's uint64
-    wraps replay the JVM's); NULL/empty shingle sets yield NULL
-    signatures in all impls (pytest-pinned digest parity)."""
-    if impl is None:
-        impl = "fused" if shingle_impl == "tokhash" else "expr"
-    if impl not in ("arrow", "expr", "fused"):
-        raise ValueError(
-            f"impl must be 'arrow', 'expr' or 'fused', got {impl!r}"
-        )
+    Parity is exact (every operand an integer — no rounding exists in
+    this arithmetic; the fused kernel's uint64 wraps replay the
+    JVM's); NULL/empty shingle sets yield NULL signatures in both
+    families (pytest-pinned)."""
     if shingle_impl not in ("string", "tokhash"):
         raise ValueError(
             f"shingle_impl must be 'string' or 'tokhash', got {shingle_impl!r}"
-        )
-    if impl == "fused" and shingle_impl != "tokhash":
-        raise ValueError(
-            "impl='fused' replays the tokhash slice-hash chain in numpy; "
-            "the string family has no token-hash stage to fuse from — "
-            "use impl='expr' or 'arrow' with shingle_impl='string'"
-        )
-    if shingle_impl == "tokhash" and hash != "md5":
-        raise ValueError(
-            "hash= selects the strong hash over shingle STRINGS; the "
-            "tokhash impl never materializes them — leave hash at its "
-            "default (the two knobs name disjoint signature families)"
         )
     base = spread(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
@@ -1232,27 +1214,20 @@ def minhash_signatures(
         tokens(F.lower(F.col(text_col)), mode="simple").alias("_toks"),
     )
     if shingle_impl == "tokhash":
-        th_staged = base.select(
-            "doc_id", token_hash_ints(F.col("_toks")).alias("_th")
-        )
-        if impl == "fused":
-            out = _minhash_sig_fused(th_staged, shingle_n, k)
-            return _with_band_hashes(out, k, with_bands)
-        staged = th_staged.select(
-            "doc_id",
-            shingle_ints_from_token_hashes(F.col("_th"), shingle_n).alias("_xs"),
+        out = _minhash_sig_fused(
+            base.select("doc_id", token_hash_ints(F.col("_toks")).alias("_th")),
+            shingle_n,
+            k,
         )
     else:
-        staged = base.select(
-            "doc_id",
-            F.array_distinct(word_ngrams(F.col("_toks"), shingle_n)).alias("sh"),
-        ).select("doc_id", shingle_ints(F.col("sh"), hash=hash).alias("_xs"))
-    if impl == "expr":
-        out = staged.select(
-            "doc_id", minhash_signature_from_ints(F.col("_xs"), k).alias("sig")
+        out = (
+            base.select(
+                "doc_id",
+                F.array_distinct(word_ngrams(F.col("_toks"), shingle_n)).alias("sh"),
+            )
+            .select("doc_id", shingle_ints(F.col("sh")).alias("_xs"))
+            .select("doc_id", minhash_signature_from_ints(F.col("_xs"), k).alias("sig"))
         )
-    else:
-        out = _minhash_sig_arrow(staged, k)
     return _with_band_hashes(out, k, with_bands)
 
 
@@ -1266,59 +1241,6 @@ def _with_band_hashes(
     return sigs.withColumn(
         band_hashes_column(b, r), band_hashes(F.col("sig"), b, r)
     )
-
-
-def _minhash_sig_arrow(staged: DataFrame, k: int) -> DataFrame:
-    """mapInPandas MinHash signature kernel (see minhash_signatures):
-    per Arrow batch, the non-null shingle-int arrays flatten into ONE
-    int64 vector; each of the k permutations is one vectorized
-    ``(a·x + b) mod p`` pass and one ``np.minimum.reduceat`` over the
-    per-doc segment offsets. Map-only — no shuffle, no join-back.
-
-    The per-permutation loop (k passes of ~total-shingles int64 ops)
-    is deliberate: a single (k, total) matrix would be exact too, but
-    peaks at k× the flat buffer per batch; the loop keeps the working
-    set at ~3 arrays of the flat size regardless of k."""
-    from pyspark.sql import types as T
-
-    a_consts = [int(a) for a in PERM_A[:k]]
-    b_consts = [int(b) for b in PERM_B[:k]]
-    id_field = staged.schema["doc_id"]
-    out_schema = T.StructType(
-        [id_field, T.StructField("sig", T.ArrayType(T.LongType()), True)]
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            xs = pdf["_xs"].to_numpy()
-            lens = np.fromiter(
-                (0 if x is None else len(x) for x in xs), dtype=np.int64, count=n
-            )
-            sigs = np.empty(n, dtype=object)
-            nz = np.nonzero(lens > 0)[0]
-            if len(nz):
-                flat = np.concatenate(
-                    [np.asarray(xs[i], dtype=np.int64) for i in nz]
-                )
-                offs = np.zeros(len(nz), dtype=np.int64)
-                np.cumsum(lens[nz][:-1], out=offs[1:])
-                mins = np.empty((len(nz), k), dtype=np.int64)
-                for j in range(k):
-                    # a·x + b < 2^62 + 2^31: exact in int64, no overflow
-                    mins[:, j] = np.minimum.reduceat(
-                        (a_consts[j] * flat + b_consts[j]) % MERSENNE_P, offs
-                    )
-                for pos, i in enumerate(nz):
-                    sigs[i] = mins[pos]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "sig": sigs})
-
-    return staged.mapInPandas(gen, out_schema)
 
 
 def _minhash_sig_fused(th_staged: DataFrame, n: int, k: int) -> DataFrame:
@@ -1347,19 +1269,21 @@ def _minhash_sig_fused(th_staged: DataFrame, n: int, k: int) -> DataFrame:
     single-long round chained across elements with the running hash as
     seed (seed 42); that is ~10 integer ops per element, replayed here
     in wrapping uint64 numpy arithmetic and verified bit-identical
-    (tests/test_minhash_hash.py digest parity vs the expr chain). The
-    floored ``%`` of numpy int64 by a positive modulus equals Spark's
-    ``pmod``. ``array_distinct`` is SKIPPED by design: the signature
-    is a min over permuted shingle values and min is
-    duplicate-invariant, so distinct-ing only changes work shape, not
-    values. Docs with fewer than ``n`` tokens (or NULL token arrays,
+    (tests/test_minhash_hash.py digest parity vs the composed
+    expression reference). The floored ``%`` of numpy int64 by a
+    positive modulus equals Spark's ``pmod``. ``array_distinct`` is
+    SKIPPED by design: the signature is a min over permuted shingle
+    values and min is duplicate-invariant, so distinct-ing only
+    changes work shape, not values. Docs with fewer than ``n`` tokens (or NULL token arrays,
     whose ``value_lengths`` fill as 0) yield NULL signatures — the
     expr contract.
 
     The permutation loop runs over the ~total-grams flat vector per
-    batch (k passes + np.minimum.reduceat at the per-doc gram offsets)
-    — the same working-set shape as _minhash_sig_arrow, plus n passes
-    of the hash chain."""
+    batch (k passes + np.minimum.reduceat at the per-doc gram offsets):
+    a single (k, total) matrix would be exact too, but peaks at k× the
+    flat buffer per batch; the loop keeps the working set at ~3 arrays
+    of the flat size regardless of k, plus n passes of the hash
+    chain."""
     from pyspark import cloudpickle
     from pyspark.sql import types as T
 
@@ -1464,8 +1388,6 @@ def minhash_near_dup_pairs(
     cap_observation=None,
     cap_strategy: str = "window",
     pair_screen: str = "auto",
-    sig_impl: str | None = None,
-    sig_hash: str = "md5",
     shingle_impl: str = "string",
     calibration: dict | None = None,
     band_stats: dict | None = None,
@@ -1547,21 +1469,21 @@ def minhash_near_dup_pairs(
     decision agg and the cap/slice stage each re-scanned the banded
     corpus; listener-gated in tests/test_build_jobs.py).
 
-    ``sig_hash`` picks the per-shingle strong hash when signatures are
-    computed here (see :func:`shingle_ints` — md5 is both the oracle
-    hash and, per the round-14 decomposition, the build-level wash
-    winner by default); recall/precision parity across hashes is
-    probe-pinned (tests/test_minhash_hash.py), est_jaccard values
-    differ per pair only in which k min-wise draws they estimate
-    from. ``shingle_impl="tokhash"`` (round 15) skips shingle-string
-    materialization entirely — the build-level lever sig_hash was not
-    (see :func:`minhash_signatures`); md5-over-strings stays the
-    oracle arm and the default. Both knobs stamp into the calibration
-    report and mismatch-raise like the structural knobs: signatures
-    from different (sig_hash, shingle_impl) families never mix. To
-    pick the family on evidence, run ``calibrate_corpus(shingle_impl=
-    "auto")`` (round 16) and pass its report as ``calibration=`` —
-    the build then runs at the measured per-corpus recommendation."""
+    ``shingle_impl`` picks the signature family when signatures are
+    computed here, and the family fixes the kernel (see
+    :func:`minhash_signatures`): ``"string"`` is the md5 oracle arm
+    and the default, ``"tokhash"`` skips shingle-string
+    materialization in one fused kernel. Recall/precision parity
+    across families is probe-pinned (tests/test_minhash_hash.py);
+    est_jaccard values differ per pair only in which k min-wise draws
+    they estimate from. The family stamps into the calibration report
+    and mismatch-raises like the structural knobs: signatures from
+    different families never mix. A report stamped with any strong
+    hash but md5 (``sig_hash``, a family no build produces any more)
+    is refused the same way. To pick the family on evidence, run
+    ``calibrate_corpus(shingle_impl="auto")`` (round 16) and pass its
+    report as ``calibration=`` — the build then runs at the measured
+    per-corpus recommendation."""
     _validate_minhash_bands(k, bands, rows)
     if pair_screen not in ("blas", "join", "auto"):
         raise ValueError(
@@ -1571,7 +1493,7 @@ def minhash_near_dup_pairs(
         sigs = track_cache(
             minhash_signatures(
                 df, id_col, text_col, shingle_n=shingle_n, k=k,
-                impl=sig_impl, hash=sig_hash, shingle_impl=shingle_impl,
+                shingle_impl=shingle_impl,
             )
         )
     else:
@@ -1586,11 +1508,12 @@ def minhash_near_dup_pairs(
         # wrong band-bucket distribution (e.g. a false
         # has_oversized=False skips the slice probe and an oversized
         # bucket mines un-sliced — the quadratic cost the cap exists
-        # to bound)
+        # to bound). Every build hashes shingle strings with md5, so a
+        # legacy report stamped with another sig_hash is refused here.
         for knob, val in (
             ("k", k), ("bands", bands), ("rows", rows),
             ("shingle_n", shingle_n), ("max_bucket", max_bucket),
-            ("sig_hash", sig_hash), ("shingle_impl", shingle_impl),
+            ("sig_hash", "md5"), ("shingle_impl", shingle_impl),
         ):
             if knob in cal and cal[knob] != val:
                 raise ValueError(
@@ -2151,8 +2074,9 @@ def _validate_simhash_bits(n_bits: int) -> None:
     """md5 supplies 32 hex digits and the digit-wise evaluation emits
     4 bits per digit: an n_bits not a multiple of 4 would zip a short
     contribution vector against the n_bits accumulator (silent
-    null-tailed garbage in the expr fold, a reshape crash in the
-    arrow kernel), and n_bits > 128 would read past the digest."""
+    null-tailed garbage in the simhash_from_hashes fold, a reshape
+    crash in the signature kernel), and n_bits > 128 would read past
+    the digest."""
     if n_bits % 4 != 0 or not 4 <= n_bits <= 128:
         raise ValueError(
             "n_bits must be a multiple of 4 in [4, 128] (md5 supplies "
@@ -2223,47 +2147,38 @@ def simhash_signatures(
     text_col: str = "text",
     *,
     n_bits: int = 64,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Scan-side SimHash signature chain → DataFrame[id_col, simhash
     '0'/'1' string] — the staged producer shared by the in-set miner,
     the registry query, and materialized signature tables.
 
-    ``impl="arrow"`` (default, round 13 — the assignment lesson
-    applied to the bit-sum fold): the md5 pass (``token_hashes``)
-    stays JVM-side, and the per-doc ±1 bit sums compute
-    per Arrow batch as pure integer numpy — hex chars → nibbles → a
-    (tokens, n_bits) bit matrix → ``np.add.reduceat`` per-doc sums —
-    replacing the interpreted ``aggregate(zip_with)`` fold whose
-    inner ``token_contrib`` costs n_bits/4 ``conv`` string parses per
-    token (CodegenFallback). Quiet-host 1M-doc interleaved A/B:
-    **2.02× (46.9 → 23.3 s)**, digest-identical — the n_bits-wide
-    per-token fold carries enough arithmetic to pay for the transfer,
-    unlike MinHash's k=16 doc-level fold (a measured wash; see
+    One kernel (round 13 — the assignment lesson applied to the
+    bit-sum fold): the md5 pass (``token_hashes``) stays JVM-side,
+    and the per-doc ±1 bit sums compute per Arrow batch as pure
+    integer numpy — hex chars → nibbles → a (tokens, n_bits) bit
+    matrix → ``np.add.reduceat`` per-doc sums — replacing the
+    interpreted ``aggregate(zip_with)`` fold whose inner
+    ``token_contrib`` costs n_bits/4 ``conv`` string parses per token
+    (CodegenFallback). Quiet-host 1M-doc interleaved A/B: **2.02×
+    (46.9 → 23.3 s)**, digest-identical — the n_bits-wide per-token
+    fold carries enough arithmetic to pay for the transfer, unlike
+    MinHash's k=16 doc-level fold (a measured wash; see
     minhash_signatures). All arithmetic is small-integer exact in
     both engines, so parity is bitwise, not approximate; NULL text →
     NULL signature and zero-token docs → the all-ones string
-    replicate the expr form's ``aggregate`` NULL/init semantics
-    (pytest-pinned digest parity). ``"expr"`` is the expression A/B
-    arm."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
+    replicate the ``aggregate`` NULL/init semantics of the expression
+    reference ``simhash_from_hashes(token_hashes(...))`` — the form
+    the DuckDB oracle replays (pytest-pinned digest parity)."""
     _validate_simhash_bits(n_bits)
     staged = spread(df.select(F.col(id_col).alias("doc_id"), F.col(text_col))).select(
         "doc_id", token_hashes(F.col(text_col)).alias("_hs")
     )
-    if impl == "expr":
-        out = staged.select(
-            "doc_id", simhash_from_hashes(F.col("_hs"), n_bits).alias("simhash")
-        )
-    else:
-        # NOTE: the kernel reads only the first n_bits/4 chars of each
-        # 32-char md5; truncating JVM-side first was measured and
-        # REJECTED — the extra interpreted transform(substring) pass
-        # costs more than the halved Arrow transfer saves (1M docs:
-        # untruncated arrow 23.3 s vs truncated 32-39 s, same session
-        # protocol)
-        out = _simhash_sig_arrow(staged, n_bits)
+    # NOTE: the kernel reads only the first n_bits/4 chars of each
+    # 32-char md5; truncating JVM-side first was measured and
+    # REJECTED — the extra interpreted transform(substring) pass costs
+    # more than the halved Arrow transfer saves (1M docs: untruncated
+    # 23.3 s vs truncated 32-39 s, same session protocol)
+    out = _simhash_sig_arrow(staged, n_bits)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out
@@ -2379,7 +2294,6 @@ def simhash_near_dup_pairs(
     signatures: DataFrame | None = None,
     cap_observation=None,
     cap_strategy: str = "window",
-    sig_impl: str = "arrow",
 ) -> DataFrame:
     """SimHash near-duplicate pairs via banded Hamming-LSH — the
     third pair-mining family next to MinHash (set overlap) and
@@ -2407,9 +2321,7 @@ def simhash_near_dup_pairs(
     _validate_simhash_blocking(n_bits, bands, max_hamming)
     if signatures is None:
         sigs = track_cache(
-            simhash_signatures(
-                df, id_col, text_col, n_bits=n_bits, impl=sig_impl
-            )
+            simhash_signatures(df, id_col, text_col, n_bits=n_bits)
         )
     else:
         sigs = signatures

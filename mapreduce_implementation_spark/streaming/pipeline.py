@@ -175,7 +175,6 @@ def commit_minhash_reference(
     rows: int = 4,
     k: int = 16,
     n_buckets: int = 32,
-    sig_hash: str = "md5",
     shingle_impl: str = "string",
 ) -> None:
     """Commit the corpus signature set as the BUCKETED banded reference
@@ -202,14 +201,13 @@ def commit_minhash_reference(
     # bands/rows/k computes band hashes over different signature
     # slices and silently matches NOTHING — the ingest starter reads
     # these properties and refuses a mismatched probe up front
-    # sig_hash/shingle_impl are the caller's DECLARATION of the
-    # signature family the sigs frame was built under (r15: families
-    # are mutually incompatible — a probe built under another family
-    # band-matches nothing); the ingest starter refuses a mismatch.
+    # shingle_impl is the caller's DECLARATION of the signature family
+    # the sigs frame was built under (r15: families are mutually
+    # incompatible — a probe built under another family band-matches
+    # nothing); the ingest starter refuses a mismatch.
     sigs.sparkSession.sql(
         f"ALTER TABLE {name} SET TBLPROPERTIES "
         f"('mris.bands'='{bands}', 'mris.rows'='{rows}', 'mris.k'='{k}', "
-        f"'mris.sig_hash'='{sig_hash}', "
         f"'mris.shingle_impl'='{shingle_impl}')"
     )
 
@@ -316,7 +314,6 @@ def start_ingest_dedup_stream(
     trigger: dict | None = None,
     observe_name: str | None = "ingest_quality",
     ref_table: str | None = None,
-    sig_hash: str = "md5",
     shingle_impl: str = "string",
 ):
     """Dedup-at-ingest: flag each incoming document that near-duplicates
@@ -368,8 +365,10 @@ def start_ingest_dedup_stream(
         want = {
             "mris.bands": bands, "mris.rows": rows, "mris.k": k,
             # r15: the signature FAMILY is part of the index contract
-            # too — a probe under another family matches nothing
-            "mris.sig_hash": sig_hash, "mris.shingle_impl": shingle_impl,
+            # too — a probe under another family matches nothing. Every
+            # probe hashes shingle strings with md5, so a legacy table
+            # stamped with another sig_hash is refused.
+            "mris.sig_hash": "md5", "mris.shingle_impl": shingle_impl,
         }
         for key, val in want.items():
             if key in props and props[key] != str(val):
@@ -384,7 +383,7 @@ def start_ingest_dedup_stream(
         spark = batch_df.sparkSession
         new_sigs = minhash_signatures(
             batch_df, id_col, text_col, shingle_n=shingle_n, k=k,
-            hash=sig_hash, shingle_impl=shingle_impl,
+            shingle_impl=shingle_impl,
         )
         if ref_table is not None:
             ref_kwargs = {"ref_banded": spark.table(ref_table)}

@@ -16,7 +16,8 @@ Gates:
 * zero decision jobs in the miner when band_stats is supplied
   (job-group gate, the test_build_jobs protocol);
 * sidecar persistence: a second minhash_band_stats call reloads from
-  the committed meta; foreign knobs raise.
+  the committed meta; foreign knobs raise, and so does a table rebuilt
+  at the same path under the old sidecar (commit fingerprint).
 """
 
 from __future__ import annotations
@@ -155,6 +156,32 @@ def test_band_stats_sidecar_reload_and_knob_guard(spark, docs):
     # cannot answer for another
     with pytest.raises(ValueError, match="band_stats"):
         _pairs(docs, sigs, 50, band_stats=stats)
+
+
+def test_band_stats_sidecar_refuses_rebuilt_table(spark, docs):
+    """A signature table rebuilt at the same path must not inherit its
+    old sidecar: a stale big_rows == 0 would elide the cap over a
+    bucket that is now oversized."""
+    root, sigs, stats = _table_with_sidecar(
+        spark, docs.where("doc_id < 100"), 50
+    )
+    assert stats["screen_stats"]["big_rows"] == 0
+    boiler = docs.where("doc_id >= 100")
+    bigger = boiler.union(boiler.select((F.col("doc_id") + 100).alias("doc_id"), "text"))
+    dd.minhash_signatures(
+        bigger, "doc_id", "text", shingle_n=KNOBS["shingle_n"],
+        k=KNOBS["k"], with_bands=(KNOBS["bands"], KNOBS["rows"]),
+    ).write.mode("overwrite").parquet(os.path.join(root, "sigs"))
+    rebuilt = spark.read.parquet(os.path.join(root, "sigs"))
+    fresh = dd.minhash_band_stats(
+        spark, rebuilt, None, bands=2, rows=4, max_bucket=50
+    )
+    assert fresh["screen_stats"]["big_rows"] > 0  # 60 boilerplate twins
+    with pytest.raises(ValueError, match="rebuild the sidecar"):
+        dd.minhash_band_stats(
+            spark, rebuilt, os.path.join(root, "sigs_bandstats"),
+            bands=2, rows=4, max_bucket=50,
+        )
 
 
 def test_cap_elision_requires_no_observation(spark, docs):

@@ -1229,10 +1229,11 @@ def test_minhash_auto_screen_parity(spark):
 
 
 class TestArrowSignatureKernels:
-    """Round-13: the md5 pass stays JVM-side; the permutation mins
-    (MinHash) and ±1 bit sums (SimHash) run as numpy reduceat kernels.
-    All arithmetic is small-integer exact in both engines, so parity
-    is bitwise — pinned here on adversarial text (NULL / empty /
+    """Round-13: the md5 pass stays JVM-side; the SimHash ±1 bit sums
+    run as one numpy reduceat kernel, pinned bitwise against its
+    expression reference ``simhash_from_hashes(token_hashes(...))``.
+    The MinHash string family stays a JVM expression chain (the oracle
+    arm). Both are pinned here on adversarial text (NULL / empty /
     whitespace-only / sub-shingle / unicode / long repeats)."""
 
     @pytest.fixture(scope="class")
@@ -1249,32 +1250,43 @@ class TestArrowSignatureKernels:
         ]
         return spark.createDataFrame(rows, ["doc_id", "text"])
 
+    @staticmethod
+    def simhash_reference(df):
+        return df.select(
+            "doc_id",
+            dd.simhash_from_hashes(dd.token_hashes("text"), 64).alias("simhash"),
+        )
+
     def test_minhash_sig_parity_and_null_semantics(self, spark, edge_docs):
-        expr = {
+        sigs = {
             r.doc_id: None if r.sig is None else tuple(r.sig)
-            for r in dd.minhash_signatures(edge_docs, impl="expr").collect()
+            for r in dd.minhash_signatures(edge_docs).collect()
         }
-        arrow = {
+        # the single-expression form over the same shingles
+        reference = {
             r.doc_id: None if r.sig is None else tuple(r.sig)
-            for r in dd.minhash_signatures(edge_docs, impl="arrow").collect()
+            for r in edge_docs.select(
+                "doc_id", dd.minhash_signature(dd.shingles("text"), 16).alias("sig")
+            ).collect()
         }
-        assert expr == arrow
+        assert sigs == reference
         # shingle-less docs (NULL/empty/whitespace/sub-shingle) → NULL sig
         for d in (2, 3, 4, 5):
-            assert arrow[d] is None
-        assert arrow[1] == arrow[8] and arrow[1] is not None
-        assert len(arrow[1]) == 16
+            assert sigs[d] is None
+        assert sigs[1] == sigs[8] and sigs[1] is not None
+        assert len(sigs[1]) == 16
+        assert sigs[6] is not None and sigs[7] is not None
 
     def test_simhash_sig_parity_and_null_semantics(self, spark, edge_docs):
-        expr = {
+        reference = {
             r.doc_id: r.simhash
-            for r in dd.simhash_signatures(edge_docs, impl="expr").collect()
+            for r in self.simhash_reference(edge_docs).collect()
         }
         arrow = {
             r.doc_id: r.simhash
-            for r in dd.simhash_signatures(edge_docs, impl="arrow").collect()
+            for r in dd.simhash_signatures(edge_docs).collect()
         }
-        assert expr == arrow
+        assert reference == arrow
         # NULL text → NULL sig; zero-token docs → the aggregate init
         # (all sums 0 >= 0) → all-ones string
         assert arrow[2] is None
@@ -1298,22 +1310,35 @@ class TestArrowSignatureKernels:
             if rows[i][1]
         ]
         big = spark.createDataFrame(rows, ["doc_id", "text"])
-        mh = lambda impl: {
-            (r.doc_a, r.doc_b, round(r.est_jaccard, 9))
-            for r in dd.minhash_near_dup_pairs(big, sig_impl=impl).collect()
-        }
-        assert mh("expr") == mh("arrow") != set()
-        sh = lambda impl: {
+        sh = lambda sigs: {
             (r.doc_a, r.doc_b, r.hamming)
-            for r in dd.simhash_near_dup_pairs(big, sig_impl=impl).collect()
+            for r in dd.simhash_near_dup_pairs(big, signatures=sigs).collect()
         }
-        assert sh("expr") == sh("arrow") != set()
+        assert sh(None) == sh(self.simhash_reference(big)) != set()
 
     def test_sig_impl_validated(self, spark, edge_docs):
-        with pytest.raises(ValueError, match="impl"):
-            dd.minhash_signatures(edge_docs, impl="vectorized")
-        with pytest.raises(ValueError, match="impl"):
-            dd.simhash_signatures(edge_docs, impl="vectorized")
+        """The measured-wash arms and their selecting knobs are gone:
+        each family has one kernel, so no signature entry point takes
+        an implementation or strong-hash knob."""
+        import inspect
+
+        from mapreduce_implementation_spark.operators.calibrate import (
+            calibrate_corpus,
+        )
+        from mapreduce_implementation_spark.streaming import pipeline as sp
+
+        removed = {
+            dd.shingle_ints: {"hash"},
+            dd.minhash_signatures: {"impl", "hash"},
+            dd.minhash_near_dup_pairs: {"sig_impl", "sig_hash"},
+            dd.simhash_signatures: {"impl"},
+            dd.simhash_near_dup_pairs: {"sig_impl"},
+            calibrate_corpus: {"sig_hash"},
+            sp.commit_minhash_reference: {"sig_hash"},
+            sp.start_ingest_dedup_stream: {"sig_hash"},
+        }
+        for fn, knobs in removed.items():
+            assert not knobs & set(inspect.signature(fn).parameters), fn
 
     def test_simhash_signatures_custom_id_col(self, spark):
         df = spark.createDataFrame([(10, "alpha beta")], ["my_id", "text"])

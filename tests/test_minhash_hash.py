@@ -1,12 +1,14 @@
-"""Round-14 verdict item 3: ``hash="xxhash64"`` as the production
-per-shingle hash for MinHash signatures.
+"""The two MinHash signature families and their kernels.
 
-The md5 pass dominates the signature build (BASELINE.md r13) but md5
-is only needed where the DuckDB oracle replays signatures bit-for-bit.
-xxhash64 (JVM intrinsic) maps shingles into the same [0, 2³¹-1) domain
-so every downstream step — permutations, banding, estimation — is
-unchanged; min-wise uniformity is hash-agnostic, so recall/precision
-on planted corpora must match md5.
+``shingle_impl="string"`` (the oracle arm) hashes shingle STRINGS with
+md5 in a JVM expression chain; ``shingle_impl="tokhash"`` draws
+shingle ints from xxhash64 token-hash slices in one fused mapInArrow
+kernel that never materializes a shingle string. The fused kernel is
+pinned bit-for-bit to its expression reference, composed from public
+helpers: ``token_hash_ints`` → ``shingle_ints_from_token_hashes`` →
+``minhash_signature_from_ints``. Min-wise sampling quality does not
+depend on which injective map drew the shingle ints, so recall and
+precision on planted corpora must match across families.
 """
 
 from __future__ import annotations
@@ -33,96 +35,6 @@ def planted(spark):
                        f"sprocket{j} flange{j} gadget{j}")
         )
     return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def test_xxhash64_sig_domain_and_null_semantics(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, None),
-            (3, ""),
-            (4, "one two"),  # fewer tokens than shingle_n=3
-            (5, "the quick brown fox jumps over the lazy dog"),
-        ],
-        ["doc_id", "text"],
-    )
-    sigs = {
-        r.doc_id: None if r.sig is None else tuple(r.sig)
-        for r in dd.minhash_signatures(docs, hash="xxhash64").collect()
-    }
-    for d in (2, 3, 4):
-        assert sigs[d] is None
-    assert sigs[1] == sigs[5] and sigs[1] is not None
-    assert len(sigs[1]) == 16
-    assert all(0 <= v < dd.MERSENNE_P for v in sigs[1])
-    # a different hash produces different min-wise draws
-    md5 = {
-        r.doc_id: None if r.sig is None else tuple(r.sig)
-        for r in dd.minhash_signatures(docs, hash="md5").collect()
-    }
-    assert md5[1] != sigs[1]
-
-
-def test_xxhash64_arrow_expr_parity(spark, planted):
-    """The arrow kernel consumes the staged shingle ints whatever hash
-    produced them — bitwise parity with the expr form must hold under
-    xxhash64 exactly as it does under md5."""
-    expr = {
-        r.doc_id: None if r.sig is None else tuple(r.sig)
-        for r in dd.minhash_signatures(
-            planted, impl="expr", hash="xxhash64"
-        ).collect()
-    }
-    arrow = {
-        r.doc_id: None if r.sig is None else tuple(r.sig)
-        for r in dd.minhash_signatures(
-            planted, impl="arrow", hash="xxhash64"
-        ).collect()
-    }
-    assert expr == arrow
-
-
-def test_xxhash64_miner_recall_parity(spark, planted):
-    """Planted-corpus recall/precision through the REAL miner chain is
-    identical under either hash: blocking and estimation quality are
-    properties of min-wise sampling, not of which strong hash draws
-    it."""
-
-    def miner(sig_hash):
-        return lambda s: dd.minhash_near_dup_pairs(
-            s, "doc_id", "text", k=16, bands=4, rows=4,
-            threshold=0.5, max_bucket=None, sig_hash=sig_hash,
-        )
-
-    md5 = dd.miner_recall_probe(
-        planted, miner("md5"), n_sample=60, threshold=0.5
-    )
-    xx = dd.miner_recall_probe(
-        planted, miner("xxhash64"), n_sample=60, threshold=0.5
-    )
-    assert md5["true_pairs"] == xx["true_pairs"] == 10
-    assert md5["recall"] == xx["recall"] == 1.0
-    assert md5["precision"] == xx["precision"] == 1.0
-
-
-def test_xxhash64_pairs_match_md5_on_exact_twins(spark, planted):
-    """Exact twins estimate 1.0 under any hash — the pair SET on this
-    corpus is hash-invariant even though the signatures differ."""
-
-    def pairs(sig_hash):
-        return sorted(
-            (r.doc_a, r.doc_b, r.est_jaccard)
-            for r in dd.minhash_near_dup_pairs(
-                planted, threshold=0.5, max_bucket=None, sig_hash=sig_hash
-            ).collect()
-        )
-
-    assert pairs("md5") == pairs("xxhash64")
-
-
-def test_invalid_hash_raises(spark, planted):
-    with pytest.raises(ValueError, match="hash"):
-        dd.minhash_signatures(planted, hash="sha2").collect()
 
 
 # ---------------------------------------------------------------------------
@@ -163,33 +75,33 @@ def test_tokhash_sig_domain_and_null_semantics(spark):
     assert md5[1] != sigs[1]
 
 
-def test_tokhash_arrow_expr_parity(spark, planted):
-    """The arrow kernel consumes the staged shingle ints whatever
-    produced them — bitwise parity with the expr form must hold under
-    tokhash exactly as under the string hashes."""
-    expr = {
-        r.doc_id: None if r.sig is None else tuple(r.sig)
-        for r in dd.minhash_signatures(
-            planted, impl="expr", shingle_impl="tokhash"
-        ).collect()
-    }
-    arrow = {
-        r.doc_id: None if r.sig is None else tuple(r.sig)
-        for r in dd.minhash_signatures(
-            planted, impl="arrow", shingle_impl="tokhash"
-        ).collect()
-    }
-    assert expr == arrow
+def _tokhash_reference(docs, shingle_n=3, k=16):
+    """The tokhash family as JVM expressions, composed from the public
+    helpers — the same tokenizer as minhash_signatures, then token
+    hashes → slice-hashed shingle ints → permutation mins."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_implementation_spark.functions.text import tokens
+
+    toks = tokens(F.lower(F.col("text")), mode="simple")
+    return (
+        docs.select("doc_id", dd.token_hash_ints(toks).alias("_th"))
+        .select(
+            "doc_id",
+            dd.shingle_ints_from_token_hashes(F.col("_th"), shingle_n).alias("_xs"),
+        )
+        .select("doc_id", dd.minhash_signature_from_ints(F.col("_xs"), k).alias("sig"))
+    )
 
 
 def test_tokhash_fused_parity_and_null_semantics(spark):
-    """Round 16 (continued): impl='fused' replays Spark's
+    """Round 16 (continued): the fused kernel replays Spark's
     xxhash64-over-slice chain in numpy — signatures must be
-    BIT-IDENTICAL to the expr tokhash arm (same family, not a fourth
-    one), including the NULL contract for shingle-less docs. The
-    fresh-process 1M-doc A/B that made fused the tokhash default
-    (expr 20.82 s vs fused 11.80 s min-of-3, digest parity on every
-    line) is in BASELINE.md r16."""
+    BIT-IDENTICAL to the composed expression reference (same family,
+    not another one), including the NULL contract for shingle-less
+    docs. The fresh-process 1M-doc A/B that made fused the tokhash
+    kernel (expr 20.82 s vs fused 11.80 s min-of-3, digest parity on
+    every line) is in BASELINE.md r16."""
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
@@ -203,39 +115,19 @@ def test_tokhash_fused_parity_and_null_semantics(spark):
         ["doc_id", "text"],
     )
 
-    def sigs(**kw):
+    def as_dict(df):
         return {
             r.doc_id: None if r.sig is None else tuple(r.sig)
-            for r in dd.minhash_signatures(
-                docs, shingle_impl="tokhash", **kw
-            ).collect()
+            for r in df.collect()
         }
 
-    expr, fused = sigs(impl="expr"), sigs(impl="fused")
-    assert expr == fused
+    reference = as_dict(_tokhash_reference(docs))
+    fused = as_dict(dd.minhash_signatures(docs, shingle_impl="tokhash"))
+    assert reference == fused
     for d in (2, 3, 4):
         assert fused[d] is None
     assert fused[1] == fused[7] is not None
     assert all(0 <= v < dd.MERSENNE_P for v in fused[1])
-    # impl=None auto-resolves to the fused production path under
-    # tokhash (value-identical, so equality is the whole check) ...
-    assert sigs() == fused
-    # ... and to expr under string (the oracle arm; parity with an
-    # explicit expr build pins the resolution without pinning values)
-    str_default = {
-        r.doc_id: None if r.sig is None else tuple(r.sig)
-        for r in dd.minhash_signatures(docs).collect()
-    }
-    str_expr = {
-        r.doc_id: None if r.sig is None else tuple(r.sig)
-        for r in dd.minhash_signatures(docs, impl="expr").collect()
-    }
-    assert str_default == str_expr
-
-
-def test_fused_requires_tokhash(spark, planted):
-    with pytest.raises(ValueError, match="fused"):
-        dd.minhash_signatures(planted, impl="fused", shingle_impl="string")
 
 
 def test_fused_kernels_ship_xxh64np_by_value(spark, planted):
@@ -372,8 +264,6 @@ def test_tokhash_ngram_jaccard_shingleless_fallback(spark):
 def test_tokhash_knob_validation(spark, planted):
     with pytest.raises(ValueError, match="shingle_impl"):
         dd.minhash_signatures(planted, shingle_impl="bogus")
-    with pytest.raises(ValueError, match="strong hash over shingle"):
-        dd.minhash_signatures(planted, hash="xxhash64", shingle_impl="tokhash")
     with pytest.raises(ValueError, match="string-impl only"):
         dd.ngram_jaccard_pairs(
             planted, shingle_impl="tokhash",
@@ -384,26 +274,26 @@ def test_tokhash_knob_validation(spark, planted):
 def test_calibration_family_mismatch_raises(spark, planted):
     """ADVICE r14: a calibration measured under one signature family
     must refuse to answer for a build under another — the band-bucket
-    distribution (screen_stats, has_oversized) is family-specific."""
-    cal = {
-        "minhash": {
-            "k": 16, "bands": 4, "rows": 4, "shingle_n": 3,
-            "max_bucket": 1000, "sig_hash": "md5",
-            "shingle_impl": "string",
-            "screen_stats": {
-                "small_rows": 10, "small_groups": 5, "big_rows": 0,
-            },
-        }
+    distribution (screen_stats, has_oversized) is family-specific.
+    Every build hashes shingle strings with md5, so a legacy report
+    stamped ``sig_hash="xxhash64"`` is refused too, never band-matched
+    against md5 builds."""
+    mh = {
+        "k": 16, "bands": 4, "rows": 4, "shingle_n": 3,
+        "max_bucket": 1000, "shingle_impl": "string",
+        "screen_stats": {
+            "small_rows": 10, "small_groups": 5, "big_rows": 0,
+        },
     }
     with pytest.raises(ValueError, match="shingle_impl"):
         dd.minhash_near_dup_pairs(
             planted, max_bucket=1000, shingle_impl="tokhash",
-            calibration=cal,
+            calibration={"minhash": mh},
         )
-    with pytest.raises(ValueError, match="sig_hash"):
-        dd.minhash_near_dup_pairs(
-            planted, max_bucket=1000, sig_hash="xxhash64",
-            calibration=cal,
-        )
-    # matched family: accepted (plan-only check, no action needed)
-    dd.minhash_near_dup_pairs(planted, max_bucket=1000, calibration=cal)
+    legacy = {"minhash": {**mh, "sig_hash": "xxhash64"}}
+    with pytest.raises(ValueError, match="sig_hash='xxhash64'"):
+        dd.minhash_near_dup_pairs(planted, max_bucket=1000, calibration=legacy)
+    # matched family, with or without the md5 stamp older reports
+    # carry: accepted (plan-only check, no action needed)
+    for cal in ({"minhash": mh}, {"minhash": {**mh, "sig_hash": "md5"}}):
+        dd.minhash_near_dup_pairs(planted, max_bucket=1000, calibration=cal)

@@ -184,6 +184,34 @@ def test_doc_quality_runs_the_arrow_kernel(spark, oracle_sf_dir):
         assert hof not in plan, plan
 
 
+def test_signature_family_selects_one_kernel(spark):
+    """Each signature family plans exactly one kernel: the MinHash
+    string family is the JVM expression chain the oracle replays (no
+    Python exec node), tokhash is one MapInArrow with no per-position
+    xxhash64(slice(...)) HOF left on the JVM, and SimHash is one
+    MapInPandas."""
+    from mapreduce_implementation_spark.operators import dedup as dd
+    from mapreduce_implementation_spark.plans.audit import _walk_physical_nodes
+
+    docs = spark.createDataFrame([(1, "a b c d"), (2, None)], ["doc_id", "text"])
+
+    def nodes(df):
+        return list(_walk_physical_nodes(df._jdf.queryExecution().executedPlan()))
+
+    def python_nodes(df):
+        return [
+            n.getClass().getSimpleName()
+            for n in nodes(df)
+            if n.getClass().getName().startswith("org.apache.spark.sql.execution.python.")
+        ]
+
+    assert python_nodes(dd.minhash_signatures(docs)) == []
+    tok = dd.minhash_signatures(docs, shingle_impl="tokhash")
+    assert python_nodes(tok) == ["MapInArrowExec"]
+    assert not any("xxhash64(slice(" in n.expressions().toString() for n in nodes(tok))
+    assert python_nodes(dd.simhash_signatures(docs)) == ["MapInPandasExec"]
+
+
 def test_bucketed_join_avoids_shuffle(spark, oracle_sf_dir):
     """Co-located join via bucketing: both tables bucketed+sorted on the
     join key → SortMergeJoin with NO exchange on either side. At 100 TB

@@ -799,6 +799,20 @@ def test_ingest_reference_contract_mismatch_fails_fast(spark, tmp_path):
                 shingle_impl="tokhash",
                 ref_table="t_contract_bands",
             )
+        # a legacy table committed under the retired xxhash64 string
+        # family: every probe hashes with md5, so it must refuse too
+        spark.sql(
+            "ALTER TABLE t_contract_bands SET TBLPROPERTIES "
+            "('mris.sig_hash'='xxhash64')"
+        )
+        with _pytest.raises(ValueError, match="mris.sig_hash=xxhash64"):
+            start_ingest_dedup_stream(
+                _docs_stream(spark, stream_dir),
+                out_dir=str(tmp_path / "f1c"),
+                checkpoint_dir=str(tmp_path / "c1c"),
+                k=16, bands=4, rows=4,
+                ref_table="t_contract_bands",
+            )
     finally:
         spark.sql("DROP TABLE IF EXISTS t_contract_bands")
 

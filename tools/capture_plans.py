@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for registry queries into plans/r16/.
+"""Capture .explain("formatted") for registry queries into plans/rN/.
 
-Usage: python tools_r16/capture_plans.py [before|after] [name ...]
+Usage: python tools/capture_plans.py --round N [before|after] [name ...]
 With no names: all 50 registry queries. Plans are captured WITHOUT
 executing the query action itself (explain only), though queries whose
 builders run eager jobs (ensure_table, counts checkpoints) will run
@@ -10,6 +10,7 @@ those as part of plan construction — same as the driver does.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -20,12 +21,16 @@ from mapreduce_implementation_spark.plans import all_queries
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", type=int, required=True)
+    ap.add_argument("suffix", nargs="?", default="before")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    suffix, names = args.suffix, args.names
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r16",
+        "plans", f"r{args.round}",
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="mris-capture-plans")
