@@ -171,12 +171,14 @@ def _signature_table(spark: SparkSession, sf_dir: str, docs: DataFrame):
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters: connected components over the MinHash+LSH
     near-dup pair graph (cluster_id = min doc_id in component) — the
-    keep-one-per-cluster shape of corpus dedup. Hybrid labeling: driver
-    union-find below the edge-count threshold (one job), large-star/
-    small-star contraction above it (O(log n) bounded shuffles); min-
-    label propagation is kept only as an opt-in fallback. The DuckDB
-    twin is a recursive reachability CTE. Pair emission reads the same
-    materialized signature artifact layout as minhash_near_dup_pairs."""
+    keep-one-per-cluster shape of corpus dedup. Hybrid labeling: below
+    the edge-count threshold the pair list is collected as one Arrow
+    batch and labeled by a vectorized numpy union-find on the driver
+    (one collect), large-star/small-star contraction above it (O(log n)
+    bounded shuffles); min-label propagation is kept only as an opt-in
+    fallback. The DuckDB twin is a recursive reachability CTE. Pair
+    emission reads the same materialized signature artifact layout as
+    minhash_near_dup_pairs."""
     docs = load_table(spark, sf_dir, "documents")
     sigs, stats = _signature_table(spark, sf_dir, docs)
     pairs = dd.minhash_near_dup_pairs(

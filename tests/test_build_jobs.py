@@ -395,3 +395,26 @@ class TestCapBucketsCounts:
             df, ("key",), 10, "id", counts=counts, has_oversized=False
         )
         assert {r._slice for r in flat.collect()} == {0}
+
+
+class TestConnectedComponentsJobs:
+    def test_local_path_job_count(self, spark):
+        """On a pre-persisted edge frame the local path launches at most
+        3 jobs — what the Row-collect implementation it replaced launched
+        on the same frame: the edge-count aggregate (an AQE shuffle-map
+        job plus its result job) and one collect. The NULL-endpoint
+        count rides inside that aggregate and adds no job."""
+        edges = (
+            spark.createDataFrame(
+                [(i, i + 1) for i in range(200)] + [(500, 501)],
+                "doc_a long, doc_b long",
+            )
+            .repartition(4)
+            .persist()
+        )
+        edges.count()
+        out, n = _count_build_jobs(
+            spark, lambda: dd.connected_components(edges)
+        )
+        assert 0 < n <= 3, f"local connected_components launched {n} jobs"
+        assert out.count() == 203

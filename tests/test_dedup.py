@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_implementation_spark.operators import dedup as dd
 from mapreduce_implementation_spark.sources.catalog import load_table
+from union_find_reference import union_find_labels
 
 SF = "/root/testdata/sf0.001"
 
@@ -186,10 +187,11 @@ def test_connected_components_raises_when_unconverged(spark):
 
 def test_connected_components_threshold_crossover(spark):
     """The local/distributed crossover is behavior-identical both ways:
-    the same edge list labeled just UNDER the threshold (driver
+    the same edge list labeled just UNDER the threshold (driver numpy
     union-find) and just OVER it (star contraction) must agree. Also
-    pins the driver-heap-safe default (≤1M pairs — 5M was ~1GB+ of
-    driver tuple overhead; judge finding r7)."""
+    pins the driver-heap-safe default (≤1M pairs — held columnar, 16
+    B/edge of int64 plus the Arrow buffer; 1M edges measured +136 MiB
+    of peak driver Python RSS)."""
     import inspect
 
     default = inspect.signature(dd.connected_components).parameters[
@@ -201,7 +203,7 @@ def test_connected_components_threshold_crossover(spark):
         "doc_a long, doc_b long",
     )
     n = edges.count()
-    local_labels = {  # n <= threshold → driver union-find
+    local_labels = {  # n <= threshold → driver numpy union-find
         (r.doc_id, r.cluster_id)
         for r in dd.connected_components(
             edges, local_threshold=n
@@ -217,6 +219,110 @@ def test_connected_components_threshold_crossover(spark):
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
         (20, 20), (21, 20), (22, 20),
     }
+
+
+def _cc_graphs(n: int = 24, seed: int = 17) -> dict[str, list[tuple[int, int]]]:
+    """Seeded edge lists on which every labeling path must agree with
+    the pure-Python union-find reference: n-edge chains, a random graph
+    over 2n ids, extreme ids. Their id ranges are disjoint, so one
+    Spark call can label all of them at once."""
+    import random
+
+    rng = random.Random(seed)
+
+    def chain(base):
+        return [(base + i, base + i + 1) for i in range(n)]
+
+    shuffled = chain(2 * n)
+    rng.shuffle(shuffled)
+    # zig-zag: the chain visits 0, n, 1, n-1, 2, ... (offset by 6n) so
+    # ids alternate low/high along it
+    order = [6 * n + v
+             for lo_hi in zip(range(n // 2 + 1), range(n, n // 2, -1))
+             for v in lo_hi]
+    r0 = 8 * n
+    rand = [(r0 + rng.randrange(2 * n), r0 + rng.randrange(2 * n))
+            for _ in range(3 * n)]
+    # self-loops (r0-1 and r0-2 have no other edge) and duplicate edges
+    rand += [(r0, r0), (r0 - 1, r0 - 1), (r0 - 2, r0 - 2)] + rand[: n // 4]
+    big = 2**62
+    return {
+        "chain_sorted": chain(0),
+        "chain_reversed": chain(4 * n)[::-1],
+        "chain_random_order": shuffled,
+        "chain_zigzag": list(zip(order, order[1:])),
+        "random_selfloops_duplicates": rand,
+        "negative_and_extreme_ids": [
+            (-5, -3), (-3, -7), (big, -big), (big - 1, big),
+            (-big + 1, -big), (-9, -9),
+        ],
+    }
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_min_label_kernel_matches_reference(seed):
+    """The numpy kernel alone, on graphs large enough for many
+    hook-and-jump rounds (no Spark needed)."""
+    import numpy as np
+
+    for name, pairs in _cc_graphs(n=3000, seed=seed).items():
+        src = np.array([a for a, _ in pairs], dtype=np.int64)
+        dst = np.array([b for _, b in pairs], dtype=np.int64)
+        verts, labels = dd._min_label_components(src, dst)
+        expected = union_find_labels(pairs)
+        assert verts.tolist() == sorted(expected), name
+        assert dict(zip(verts.tolist(), labels.tolist())) == expected, name
+
+
+def test_connected_components_paths_match_reference(spark):
+    """The local numpy union-find and the star path (local_threshold=0)
+    label every graph — and the empty edge list — exactly like the dict
+    union-find reference; the local path's rows come sorted by
+    doc_id."""
+    combined = [e for g in _cc_graphs().values() for e in g]
+    for pairs in (combined, []):
+        edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+        local = dd.connected_components(edges).collect()
+        star = dd.connected_components(edges, local_threshold=0).collect()
+        expected = union_find_labels(pairs)
+        assert [r.doc_id for r in local] == sorted(expected)
+        assert {r.doc_id: r.cluster_id for r in local} == expected
+        assert {r.doc_id: r.cluster_id for r in star} == expected
+
+
+def test_connected_components_output_contract(spark):
+    """Empty input → 0 rows of ``doc_id bigint, cluster_id bigint``;
+    int/short ids come back as long; a self-loop-only node stays its
+    own singleton cluster."""
+    schema = spark.createDataFrame([], "doc_id long, cluster_id long").schema
+    empty = dd.connected_components(
+        spark.createDataFrame([], "doc_a long, doc_b long")
+    )
+    assert empty.schema == schema
+    assert empty.count() == 0
+    for dtype in ("int", "short"):
+        edges = spark.createDataFrame(
+            [(1, 2), (5, 5)], f"doc_a {dtype}, doc_b {dtype}"
+        )
+        out = dd.connected_components(edges)
+        assert out.schema == schema, dtype
+        assert [tuple(r) for r in out.collect()] == [(1, 1), (2, 1), (5, 5)]
+
+
+@pytest.mark.parametrize("local_threshold", [1_000_000, 0])
+@pytest.mark.parametrize(
+    "pairs", [[(None, 1)], [(None, None)], [(1, 2), (3, None)]]
+)
+def test_connected_components_null_endpoint_raises(
+    spark, pairs, local_threshold
+):
+    """A NULL endpoint names no document: both the local and the star
+    path refuse it up front with the same error, naming the columns."""
+    edges = spark.createDataFrame(pairs, "src_id long, dst_id long")
+    with pytest.raises(ValueError, match="NULL 'src_id' or 'dst_id'"):
+        dd.connected_components(
+            edges, "src_id", "dst_id", local_threshold=local_threshold
+        )
 
 
 def test_ngram_jaccard_cap_drops_boilerplate_keeps_rest(spark):
@@ -271,7 +377,7 @@ def test_star_contraction_matches_union_find_on_random_graph(spark):
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    expected = dd._union_find_local(edges)
+    expected = union_find_labels(edges)
     got = {
         r.doc_id: r.cluster_id
         for r in dd.connected_components_star(df).collect()
