@@ -404,8 +404,9 @@ DEFAULT_MAX_BUCKET = 1000
 # the enumerate-and-fold join below it. applyInPandas costs per GROUP
 # (Arrow batch + Python dispatch), the join costs per candidate PAIR:
 # tiny groups generate almost no pairs but still pay the group toll.
-# MEASURED (round-13 sweep, adjudicate_r13.py: 200k dim-64 vectors,
-# bucket = id//m, min-of-2 interleaved, seconds join vs blas):
+# MEASURED (BASELINE.md, "Round 13 — pair_screen=auto" sweep: 200k
+# dim-64 vectors, bucket = id//m, min-of-2 interleaved, seconds join
+# vs blas):
 #   m=1 0.55/23.07  m=2 0.59/13.07  m=4 0.76/7.51  m=8 1.08/4.19
 #   m=16 1.66/2.53  m=32 3.03/1.70  m=64 5.35/1.25
 # — join wins through m=16, blas from m=32; 24 is the midpoint. The

@@ -288,10 +288,17 @@ def stratified_fixed_n(
 
 def _estimated_partitions(df: DataFrame) -> int:
     """Cheap scan-parallelism upper-bound estimate for the phase-2
-    guard: file-split arithmetic where the plan scans local files
-    (dedup._estimate_scan_splits — driver-side stats, no Spark job),
-    else the cluster's default parallelism. An underestimate only
-    skips the optional intermediate level (perf, never correctness)."""
+    guard: the planned output partitioning when the plan fixes one
+    (e.g. a ``repartition(n)`` frame), else file-split arithmetic
+    where the plan scans local files (dedup._estimate_scan_splits —
+    driver-side stats), else the cluster's default parallelism. None
+    of these runs a Spark job. An underestimate only skips the
+    optional intermediate level (perf, never correctness)."""
+    planned = (
+        df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
+    )
+    if planned > 0:
+        return planned
     try:
         files = df.inputFiles()
     except Exception:

@@ -13,8 +13,9 @@ Engine shape (and why it survives 100 TB):
 * Clustering reuses the IVF machinery (operators.similarity.
   train_centroids — integer-exact spherical k-means, deterministic
   md5-ordered init) so the cluster assignment is ONE map-only pass
-  over the vectors against driver-held k x d centroid literals: no
-  crossJoin explosion, no per-vector window shuffle.
+  over the vectors against the driver-held k x d centroid matrix
+  (one numpy matmul per Arrow batch): no crossJoin explosion, no
+  per-vector window shuffle.
 * The candidate join is an EQUI self-join on ``centroid_id`` — the
   cluster plays the role the LSH band plays in the token miners, so
   the pair count is bounded by per-cluster size, never all-pairs.
@@ -172,7 +173,6 @@ def semantic_dedup(
     exempt_strategy: str = "slice",
     exemption_observation=None,
     pair_screen: str = "auto",
-    assign_impl: str = "arrow",
 ) -> DataFrame:
     """Semantic dedup: k-means clusters + within-cluster cosine screen.
 
@@ -235,11 +235,10 @@ def semantic_dedup(
     whole cluster). Results are parity-gated equal (demoted slice
     oracle + planted twins).
 
-    ``assign_impl`` picks the assignment kernel
-    (similarity.assign_inverted_lists): ``"arrow"`` (default) is the
-    round-13 mapInPandas matmul — the round-12 decomposition showed
-    the assignment's HOF folds dominating the whole operator;
-    ``"expr"`` is the all-expression A/B arm. Parity-gated identical.
+    The assignment is similarity.assign_inverted_lists — one
+    mapInPandas matmul pass (round 13: the round-12 decomposition
+    showed the expression form's HOF folds dominating the whole
+    operator; the matmul form measured 3.8× e2e, BASELINE.md r13).
     """
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
@@ -265,7 +264,7 @@ def semantic_dedup(
     # instead of three — numerically identical (same sqrt(left-fold)
     # bits, same denominator product) but ~3x less HOF work in the hot
     # join. Cached: the self-join reads the assignment twice and the
-    # assignment chain (k x d literal fold per row) is the expensive
+    # assignment (a k x d matmul per Arrow batch) is the expensive
     # part. Session-scale cache, released by the registry sweep; a
     # persistent pipeline should materialize via sources/materialize
     # (the IVF index row shows the pattern).
@@ -291,7 +290,7 @@ def semantic_dedup(
         assigned = track_cache(
             sim.assign_inverted_lists(
                 vectors, centroids, 1, id_col=id_col, emb_col=emb_col,
-                keep_cols=(emb_col,), impl=assign_impl,
+                keep_cols=(emb_col,),
             ).withColumn("_vn", norm(F.col(emb_col)))
         )
     if max_cluster is not None:

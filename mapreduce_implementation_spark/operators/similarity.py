@@ -172,14 +172,7 @@ def _brute_force_topk_arrow(
                 continue
             embs = pdf[emb_col].to_numpy()
             ids = pdf[id_col].to_numpy()
-            ok = np.fromiter(
-                (e is not None and len(e) == d for e in embs),
-                dtype=bool,
-                count=n,
-            )
-            m = np.zeros((n, d), dtype=np.float64)
-            for i in np.nonzero(ok)[0]:
-                m[i] = np.asarray(embs[i], dtype=np.float64)
+            ok, m = _stack_rows(embs, d)
             vn = np.sqrt(np.einsum("ij,ij->i", m, m))
             denom = vn[:, None] * qn[None, :]
             not_self = ids[:, None] != qid_arr[None, :]
@@ -255,7 +248,6 @@ def _with_buckets(
     id_col: str,
     emb_col: str,
     keep_emb: bool = False,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Attach an SRP bucket string: sign of dot(embedding, plane_j) for
     each plane, concatenated in plane order.
@@ -267,58 +259,27 @@ def _with_buckets(
     centroids). ``keep_emb`` also carries the embedding through,
     saving callers the re-join.
 
-    ``impl="arrow"`` (default, round 13 — the assignment lesson
-    applied to bucketing): per Arrow batch, ONE (n,d)@(d,P) matmul
-    yields all P dots, signs become the bit string vectorized —
-    replacing P interpreted HOF dot folds per row (CodegenFallback).
-    Sign parity with the expr form is exact: a BLAS dot can only
-    disagree with the left fold inside a ~1e-14 band around 0, and
-    every |dot| < 1e-9 is recomputed through Spark's exact left fold
-    before the sign is taken. Null/ragged embeddings produce the
-    all-zeros bucket (the expr form's ``otherwise("0")`` on a null
-    dot), zero vectors the all-ones bucket (0.0 ≥ 0) — pytest-pinned.
-    ``"expr"`` is the round-9 expression A/B arm."""
-    from mapreduce_implementation_spark.functions.vectors import dot
-
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    plane_rows = sorted(
-        planes.select("plane_id", "plane_emb").collect(), key=lambda r: r.plane_id
-    )
-    if impl == "arrow":
-        return _with_buckets_arrow(
-            df, [list(map(float, r.plane_emb)) for r in plane_rows],
-            id_col, emb_col, keep_emb,
-        )
-
-    def bit(pe) -> Column:
-        # one py4j call per ARRAY, not per element (64-dim planes
-        # otherwise cost ~100 py4j round-trips each at plan build)
-        arr = F.lit([float(x) for x in pe])
-        return F.when(dot(F.col(emb_col), arr) >= 0, F.lit("1")).otherwise(
-            F.lit("0")
-        )
-
-    bucket = F.concat(*[bit(r.plane_emb) for r in plane_rows]).alias("bucket")
-    cols = [F.col(id_col), bucket]
-    if keep_emb:
-        cols.insert(1, F.col(emb_col))
-    return df.select(*cols)
-
-
-def _with_buckets_arrow(
-    df: DataFrame,
-    plane_vals: list[list[float]],
-    id_col: str,
-    emb_col: str,
-    keep_emb: bool,
-) -> DataFrame:
-    """mapInPandas SRP bucketing kernel (see _with_buckets): one
-    matmul per Arrow batch, boundary-exact signs."""
+    Per Arrow batch, ONE (n,d)@(d,P) matmul yields all P dots and the
+    signs become the bit string vectorized (round 13: 3.3× over P
+    interpreted HOF dot folds per row). The bits equal the expression
+    ``when(dot(emb, plane) >= 0, "1").otherwise("0")`` the DuckDB twin
+    replays: a BLAS dot can only disagree with the left fold inside a
+    ~1e-14 band around 0, and every |dot| < 1e-9 is recomputed through
+    Spark's exact left fold before the sign is taken. Null/ragged
+    embeddings produce the all-zeros bucket (a NULL dot), zero vectors
+    the all-ones bucket (0.0 ≥ 0) — pinned against the expression
+    reference in tests/similarity_reference.py."""
     from pyspark.sql import types as T
 
     ship_module_by_value()
 
+    plane_vals = [
+        [float(x) for x in r.plane_emb]
+        for r in sorted(
+            planes.select("plane_id", "plane_emb").collect(),
+            key=lambda r: r.plane_id,
+        )
+    ]
     pre = df.select(F.col(id_col), F.col(emb_col))
     in_schema = pre.schema
     out_fields = [in_schema[id_col]]
@@ -340,14 +301,7 @@ def _with_buckets_arrow(
             if n == 0:
                 continue
             embs = pdf[emb_col].to_numpy()
-            ok = np.fromiter(
-                (e is not None and len(e) == d for e in embs),
-                dtype=bool,
-                count=n,
-            )
-            m = np.zeros((n, d), dtype=np.float64)
-            for i in np.nonzero(ok)[0]:
-                m[i] = np.asarray(embs[i], dtype=np.float64)
+            ok, m = _stack_rows(embs, d)
             dots = m @ pmat.T  # n x P
             boundary = ok[:, None] & (np.abs(dots) < 1e-9)
             if boundary.any():
@@ -364,6 +318,34 @@ def _with_buckets_arrow(
             yield pd.DataFrame(out)
 
     return pre.mapInPandas(gen, out_schema)
+
+
+def _stack_rows(embs, d: int):
+    """Validity mask (non-NULL and exactly ``d`` long) and the valid
+    rows stacked into an (n, d) float64 matrix; invalid rows stay
+    all-zero. Shared by every Arrow-batched scoring kernel here."""
+    import numpy as np
+
+    ok = np.fromiter(
+        (e is not None and len(e) == d for e in embs),
+        dtype=bool,
+        count=len(embs),
+    )
+    m = np.zeros((len(embs), d), dtype=np.float64)
+    for i in np.nonzero(ok)[0]:
+        m[i] = np.asarray(embs[i], dtype=np.float64)
+    return ok, m
+
+
+def _centroid_table(cents):
+    """Driver-held ``(id, values)`` centroids → ids, float rows, and
+    norms as Python left folds (the IEEE sequence of the SQL twin's
+    list_sum and of Spark's norm fold)."""
+    import math
+
+    vals = [[float(x) for x in emb] for _, emb in cents]
+    norms = [math.sqrt(sum(x * x for x in v)) for v in vals]
+    return [int(cid) for cid, _ in cents], vals, norms
 
 
 def ship_module_by_value() -> None:
@@ -447,21 +429,20 @@ def train_centroids(
     *,
     sample_n: int | None = None,
     n_rows: int | None = None,
-    assign_impl: str = "arrow",
 ) -> DataFrame:
     """Spherical k-means (Lloyd) producing REAL trained IVF centroids,
     deterministically and engine-reproducibly:
 
     * init: the k rows ranked first by ``md5(vec_id)`` — a seeded
       pseudo-random draw both engines order identically.
-    * assign: argmax quantized cosine against the current centroids
-      (ties → smaller centroid id) — one broadcast pass over the data,
-      no shuffle beyond the tiny per-vector window.
-    * update: per-dimension integer sums (exact in any aggregation
-      order — THE property that makes distributed training
-      reproducible; float sums are order-dependent) with
-      ``floor(sum/count)`` in micro-units; empty clusters keep their
-      previous centroid.
+    * assign + update, fused in one mapInPandas pass per iteration
+      (_train_sums_arrow): argmax quantized cosine against the current
+      centroids (ties → smaller centroid id, the assign_inverted_lists
+      kernel), then per-centroid per-dimension integer sums (exact in
+      any aggregation order — THE property that makes distributed
+      training reproducible; float sums are order-dependent), reduced
+      by one k×d-row groupBy; ``floor(sum/count)`` in micro-units on
+      the driver; empty clusters keep their previous centroid.
 
     Centroids are k×d values — held on the driver between iterations
     (the same design as MLlib's KMeans), so each iteration is one
@@ -548,48 +529,23 @@ def train_centroids(
         (i, list(r.ev)) for i, r in enumerate(init_rows)
     ]
     for _ in range(iters):
-        if assign_impl == "arrow":
-            # Fused update (r16): assignment + per-centroid integer
-            # sums in one mapInPandas pass — each task returns at most
-            # k×d partial rows, pre-reduced by one tiny groupBy so the
-            # driver collects exactly k×d rows regardless of task
-            # count (driver-side reduce of tasks×k×d partials was
-            # measured WORSE than the unfused shape at k=64: 1.94 s vs
-            # 1.53 s, while this form reads 1.16 s — the collect, not
-            # the exchange, is the scaling hazard; see
-            # _train_sums_arrow's parity notes)
-            sums = (
-                _train_sums_arrow(vq, centroids, "ev")
-                .groupBy("centroid_id", "pos")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-        else:
-            # expr A/B arm keeps the unfused shape: keep_cols carries
-            # the vector through the assignment projection — no
-            # per-iteration shuffle self-join back to vq; centroids go
-            # straight from the driver list (no createDataFrame →
-            # collect round trip per iteration)
-            assigned = _assign_from_list(
-                vq, centroids, 1, "vec_id", "ev", keep_cols=("ev",),
-                impl=assign_impl,
-            )
-            sums = (
-                assigned.select(
-                    "centroid_id", F.posexplode("ev").alias("pos", "val")
-                )
-                .groupBy("centroid_id", "pos")
-                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
+        # Fused update (r16): assignment + per-centroid integer sums in
+        # one mapInPandas pass — each task returns at most k×d partial
+        # rows, pre-reduced by one tiny groupBy so the driver collects
+        # exactly k×d rows regardless of task count (driver-side reduce
+        # of tasks×k×d partials was measured WORSE than the unfused
+        # shape at k=64: 1.94 s vs 1.53 s, while this form reads
+        # 1.16 s — the collect, not the exchange, is the scaling
+        # hazard; see _train_sums_arrow's parity notes)
+        sums = (
+            _train_sums_arrow(vq, centroids, "ev")
+            .groupBy("centroid_id", "pos")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .collect()
+        )
         by_cid: dict[int, dict[int, tuple[int, int]]] = {}
         for r in sums:
-            prev = by_cid.setdefault(r.centroid_id, {}).get(r.pos)
-            if prev is not None:
-                # driver-side reduce of per-task partials (arrow path)
-                by_cid[r.centroid_id][r.pos] = (prev[0] + r.s, prev[1] + r.n)
-            else:
-                by_cid[r.centroid_id][r.pos] = (r.s, r.n)
+            by_cid.setdefault(r.centroid_id, {})[r.pos] = (r.s, r.n)
         new_centroids = []
         for cid, old in centroids:
             dims = by_cid.get(cid)
@@ -622,7 +578,6 @@ def train_two_level_centroids(
     emb_col: str = "embedding",
     *,
     sample_n: int | None = None,
-    assign_impl: str = "arrow",
 ) -> tuple[DataFrame, DataFrame]:
     """Two-level (coarse → fine) centroid hierarchy — the IMI-style
     answer to the flat assignment's O(N · k · d) per-corpus cost: with
@@ -657,11 +612,11 @@ def train_two_level_centroids(
     # the fine level is already a bounded per-cell top-N selection
     coarse = train_centroids(
         vectors, k=k_coarse, iters=iters, id_col=id_col, emb_col=emb_col,
-        sample_n=sample_n, assign_impl=assign_impl,
+        sample_n=sample_n,
     )
     assigned = assign_inverted_lists(
         vectors, coarse, 1, id_col=id_col, emb_col=emb_col,
-        keep_cols=(emb_col,), impl=assign_impl,
+        keep_cols=(emb_col,),
     )
     picks = stratified_fixed_n(assigned, "centroid_id", k_fine, key_col=id_col)
     rows = picks.select("centroid_id", id_col, emb_col).collect()
@@ -697,49 +652,36 @@ def assign_two_level(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     keep_cols: tuple[str, ...] = (),
-    impl: str = "arrow",
 ) -> DataFrame:
     """Two-level assignment: argmax-cosine coarse cell (ties → smaller
     id, same convention as the flat path), then argmax among THAT
     cell's fine centroids — per-row score work O((k_coarse + k_fine)·d)
     instead of the flat O(k_total · d).
 
-    The coarse stage is the flat literal argmax (k_coarse is driver-
-    small). The fine stage is a BROADCAST equi-join on the chosen cell
-    (fine is k1·k2 rows — driver-small by construction) followed by a
-    partial-agg max: each joined row scores exactly ONE (vector, fine
-    centroid) pair inside whole-stage codegen, and the per-vector
-    argmax is ``max(struct(score, -centroid_id, …))`` — ties to the
-    smaller id, identical to the flat path's ordering. The exchange
-    after partial aggregation carries exactly one row per input vector
-    (a vector's k2 candidate rows are produced inside one map task).
+    Both stages run FUSED in one mapInPandas pass: per Arrow batch, one
+    matmul against the coarse matrix picks the cell, then one matmul
+    per distinct chosen cell against that cell's fine block (fine is
+    k1·k2 rows — driver-small by construction). Map-only: no broadcast
+    join, no per-vector argmax exchange. Against the round-9 expression
+    form (literal coarse argmax + broadcast fine join + ``max(struct)``
+    aggregate) the round-13 A/B at 800k vectors measured the hierarchy
+    build 3.0× and the two-level semantic e2e 3.8× faster (BASELINE.md).
 
-    Measured (BASELINE.md round-9, n=100k dim=64 k=32×32): this form
-    runs 6.3 s vs 70 s for flat k=1024 (11×; theory 16×). A previous
-    all-expression form (ragged 3-D literal + element_at inside the
-    argmax lambda) was map-only but evaluated the per-cell argmax
-    through interpreted higher-order functions — 38 s, i.e. 6× slower
-    than paying this one skinny shuffle.
+    Ranking is the flat path's contract at both stages: quantized
+    DECIMAL(10,4) cosine (np_quantize_q4's exact-fold replay at the
+    rounding boundaries), score DESC, centroid id ASC; NULL scores
+    (null/ragged/zero rows) never beat real ones, so such a row takes
+    the smallest coarse cell and that cell's smallest fine id. Pinned
+    against the expression reference in tests/similarity_reference.py
+    (tests/test_two_level.py).
 
     Returns DataFrame[id_col, *keep_cols, centroid_id] with the GLOBAL
-    fine centroid id — one row per distinct id (ids are assumed
-    unique, as everywhere in the similarity stack).
+    fine centroid id — one row per input row (ids are assumed unique,
+    as everywhere in the similarity stack)."""
+    from pyspark.sql import types as T
 
-    ``impl="arrow"`` (default) FUSES both stages into one mapInPandas
-    pass: per Arrow batch, one matmul against the coarse matrix, then
-    one matmul per distinct chosen cell against that cell's fine
-    block — map-only, no broadcast join, no per-vector argmax
-    exchange (the expr form's one skinny shuffle disappears). Scores,
-    quantization, tie and null ordering are bit-matched to the expr
-    form via np_quantize_q4's exact-fold replay (parity pytest-pinned
-    in tests/test_two_level.py). ``"expr"`` is the round-9 A/B arm
-    described above."""
-    import math as _math
+    from mapreduce_implementation_spark.functions.vectors import norm
 
-    from mapreduce_implementation_spark.functions.vectors import dot, norm
-
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     cents = sorted(
         (
             (int(r.centroid_id), [float(x) for x in r.centroid_emb])
@@ -748,8 +690,6 @@ def assign_two_level(
     )
     if not cents:
         raise ValueError("coarse centroid set is empty")
-    # fine is k1·k2 rows — driver-small by construction; one collect
-    # serves both the completeness check and the arrow fine blocks
     fine_rows = sorted(
         (
             (
@@ -770,107 +710,10 @@ def assign_two_level(
             f"coarse cells {missing[:5]} have no fine centroids; pass "
             f"the (coarse, fine) pair from train_two_level_centroids"
         )
-    if impl == "arrow":
-        return _assign_two_level_arrow(
-            vectors, cents, fine_rows, id_col, emb_col, keep_cols
-        )
-
-    cmat = F.lit([emb for _, emb in cents])
-    cnorms = F.lit([_math.sqrt(sum(x * x for x in emb)) for _, emb in cents])
-    cnegids = F.lit([-cid for cid, _ in cents])
-
-    pre = vectors.select(
-        F.col(id_col),
-        F.col(emb_col),
-        *[F.col(c) for c in keep_cols if c != emb_col],
-        norm(F.col(emb_col)).alias("_vn"),
-    )
-
-    def score_struct(i):
-        denom = cnorms[i] * F.col("_vn")
-        s = F.when(denom != 0, dot(cmat[i], F.col(emb_col)) / denom).cast(
-            COS_Q
-        )
-        return F.struct(s.alias("s"), cnegids[i].alias("negid"))
-
-    structs = F.transform(
-        F.sequence(F.lit(0), F.lit(len(cents) - 1)), score_struct
-    )
-    c_cell = -F.element_at(F.reverse(F.array_sort(structs)), 1)["negid"]
-    with_cell = pre.withColumn("_c1", c_cell.cast("int"))
-
-    f = fine.select(
-        F.col("coarse_id").alias("_fcell"),
-        (-F.col("centroid_id")).alias("_negid"),
-        F.col("centroid_emb").cast("array<double>").alias("_femb"),
-    ).withColumn(
-        "_fnorm",
-        F.sqrt(F.aggregate("_femb", F.lit(0.0), lambda a, v: a + v * v)),
-    )
-    joined = with_cell.join(
-        F.broadcast(f), F.col("_c1") == F.col("_fcell")
-    )
-    denom = F.col("_fnorm") * F.col("_vn")
-    fine_s = F.when(
-        denom != 0, dot("_femb", F.col(emb_col)) / denom
-    ).cast(COS_Q)
-    scored = joined.select(
-        F.col(id_col),
-        fine_s.alias("_s"),
-        F.col("_negid"),
-        *[F.col(c) for c in keep_cols],
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.max(
-            F.struct(
-                F.col("_s"),
-                F.col("_negid"),
-                *[F.col(c) for c in keep_cols],
-            )
-        ).alias("_m")
-    )
-    return agg.select(
-        F.col(id_col),
-        *[F.col(f"_m.{c}").alias(c) for c in keep_cols],
-        (-F.col("_m._negid")).cast("int").alias("centroid_id"),
-    )
-
-
-def _assign_two_level_arrow(
-    vectors: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    fine_rows: list[tuple[int, int, list[float]]],
-    id_col: str,
-    emb_col: str,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Fused two-level assignment kernel (see assign_two_level): one
-    mapInPandas pass — batch @ coarse matrix for the cell, then for
-    each distinct cell in the batch, cell-members @ that cell's fine
-    block. Per-row work stays O((k₁+k₂)·d) like the expr form, but in
-    BLAS instead of interpreted folds, and the expr form's broadcast
-    join + per-vector max-agg exchange vanish: this is map-only.
-
-    Parity: coarse stage is the _assign_arrow contract (ties → smaller
-    coarse id, null/ragged/zero rows → all −inf → smallest cell). Fine
-    stage replays the expr form's ``max(struct(s, negid))``: stable
-    argmax over (−score) with fine blocks pre-sorted by centroid_id —
-    ties to the smaller fine id, null scores never beat real ones, and
-    an all-null row takes its cell's smallest fine id. Boundary-
-    adjacent scores replay the exact fold (np_quantize_q4)."""
-    import math
-
-    from pyspark.sql import types as T
-
-    from mapreduce_implementation_spark.functions.vectors import norm
 
     ship_module_by_value()
 
-    coarse_ids = [cid for cid, _ in cents]
-    coarse_vals = [vals for _, vals in cents]
-    coarse_norms = [
-        math.sqrt(sum(x * x for x in vals)) for _, vals in cents
-    ]
+    coarse_ids, coarse_vals, coarse_norms = _centroid_table(cents)
     fine_by_cell: dict[int, list[tuple[int, list[float]]]] = {}
     for ccell, fid, vals in fine_rows:
         fine_by_cell.setdefault(ccell, []).append((fid, vals))
@@ -898,13 +741,13 @@ def _assign_two_level_arrow(
         k1, d = cmat.shape
         blocks = {}
         for ccell, members in fine_by_cell.items():
-            fids = np.array([fid for fid, _ in members], dtype=np.int32)
-            fmat = np.array([v for _, v in members], dtype=np.float64)
-            fn = np.array(
-                [math.sqrt(sum(x * x for x in v)) for _, v in members],
-                dtype=np.float64,
+            fids, fvals, fnorms = _centroid_table(members)
+            blocks[ccell] = (
+                np.array(fids, dtype=np.int32),
+                np.array(fvals, dtype=np.float64),
+                np.array(fnorms, dtype=np.float64),
+                fvals,
             )
-            blocks[ccell] = (fids, fmat, fn, [v for _, v in members])
 
         for pdf in batches:
             n = len(pdf)
@@ -912,14 +755,8 @@ def _assign_two_level_arrow(
                 continue
             embs = pdf[emb_col].to_numpy()
             vn = pdf["_vn"].to_numpy(dtype=np.float64)
-            ok = np.fromiter(
-                (e is not None and len(e) == d for e in embs),
-                dtype=bool,
-                count=n,
-            ) & np.isfinite(vn)
-            m = np.zeros((n, d), dtype=np.float64)
-            for i in np.nonzero(ok)[0]:
-                m[i] = np.asarray(embs[i], dtype=np.float64)
+            ok, m = _stack_rows(embs, d)
+            ok &= np.isfinite(vn)
             denom = vn[:, None] * cn[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.where(
@@ -978,142 +815,29 @@ def assign_inverted_lists(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     keep_cols: tuple[str, ...] = (),
-    impl: str = "arrow",
 ) -> DataFrame:
     """IVF assignment: nearest ``nprobe`` centroids per vector by
     quantized cosine (ties → smaller centroid_id). ``centroids`` is
     DataFrame[centroid_id int, centroid_emb array<numeric>] — k×d,
-    collected to the driver and inlined as array literals, so the whole
-    assignment is ONE scan-side projection: per row, an array of
-    (score, -centroid_id) structs is sorted and the top ``nprobe``
-    taken. No crossJoin row explosion, no per-vector ranking-window
-    shuffle — at 100 TB this is a map-only pass over the vectors
-    (centroids are driver-small by construction, as in MLlib).
+    collected to the driver and shipped with the task, so the whole
+    assignment is ONE map-only mapInPandas pass: per Arrow batch, ONE
+    (n, d) @ (d, k) matmul against the centroid matrix. No crossJoin
+    row explosion, no per-vector ranking-window shuffle — at 100 TB
+    this is a map-only pass over the vectors (centroids are
+    driver-small by construction, as in MLlib). Measured (BASELINE.md
+    r13, 800k vectors) 6.1× over the round-12 expression form, whose
+    n·k interpreted HOF dot folds (CodegenFallback) were ≈100% of the
+    semantic slice e2e.
 
-    Returns DataFrame[id_col, centroid_id] — one row per (vector,
-    probed list). The struct sort orders by score then -centroid_id, so
-    reading from the top gives score DESC, centroid_id ASC — identical
-    to the oracle's ROW_NUMBER ordering.
+    Returns DataFrame[id_col, *keep_cols, centroid_id] — one row per
+    (vector, probed list), ordered score DESC, centroid_id ASC: the
+    oracle's ROW_NUMBER ordering. Bit-parity with that quantized
+    ranking, term by term:
 
-    ``impl`` picks the physical form (results parity-gated identical,
-    tests/test_similarity.py): ``"arrow"`` (default) scores each Arrow
-    batch as ONE numpy matmul against the broadcast k×d centroid
-    matrix via mapInPandas — the round-13 fix for the expression
-    form's CodegenFallback HOF folds, which dominated every
-    semantic-family number (round-12 decomposition: assignment ≈ 100%
-    of the 800k slice e2e). ``"expr"`` is the all-expression A/B arm
-    (k×d literal + per-row struct-sort argmax)."""
-    cent_rows = sorted(
-        centroids.select("centroid_id", "centroid_emb").collect(),
-        key=lambda r: r.centroid_id,
-    )
-    cents = [(int(r.centroid_id), [float(x) for x in r.centroid_emb]) for r in cent_rows]
-    return _assign_from_list(df, cents, nprobe, id_col, emb_col, keep_cols, impl)
-
-
-def _assign_from_list(
-    df: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    nprobe: int,
-    id_col: str,
-    emb_col: str,
-    keep_cols: tuple[str, ...] = (),
-    impl: str = "arrow",
-) -> DataFrame:
-    """Assignment core over driver-held centroids (id, values). Split
-    out so the Lloyd training loop can skip the per-iteration
-    createDataFrame → collect round trip.
-
-    ``impl="arrow"`` (default) is the mapInPandas matmul form
-    (_assign_arrow) — one BLAS Gram per Arrow batch, zero per-row HOF
-    folds; ``"expr"`` is the all-expression A/B arm below. Results are
-    parity-gated identical (same quantized argmax, same tie and
-    null-score ordering — tests/test_similarity.py).
-
-    Expr form: the k×d centroid matrix ships as ONE 2-D array literal
-    and the score array is a single ``transform`` over
-    ``sequence(0, k-1)`` — a constant-size expression tree. The
-    previous shape (k separate struct expressions, each embedding its
-    own d-element literal dot) cost ~2s of driver-side build/analysis
-    per call at k=8, d=64 — paid on EVERY Lloyd iteration; this form
-    builds in ~10 py4j calls and analyzes in milliseconds, with
-    bit-identical scores (same values, same left-to-right fold, same
-    quantization cast)."""
-    import math
-
-    from mapreduce_implementation_spark.functions.vectors import dot, norm
-
-    if not cents:
-        # sequence(0, -1) yields [0, -1], not [] — an empty centroid
-        # set would emit NULL-centroid rows instead of an empty result
-        raise ValueError("centroid set is empty; train or supply >= 1 centroid")
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    if impl == "arrow":
-        return _assign_arrow(df, cents, nprobe, id_col, emb_col, keep_cols)
-
-    # centroid norms on the driver: Python's left-to-right double sum is
-    # the same IEEE fold as the SQL twin's list_sum, so the quantized
-    # score stays bit-identical while the per-row cost drops from
-    # k×(dot+2 norms) to k×dot + 1 norm.
-    # float-coerce so int (micro-quantized) centroids build the same
-    # array<array<double>> literal the float path does
-    cent_mat = F.lit(
-        [[float(x) for x in c_emb] for _, c_emb in cents]
-    )  # one py4j call, k×d
-    cent_norms = F.lit(
-        [math.sqrt(sum(float(x) * float(x) for x in c_emb)) for _, c_emb in cents]
-    )
-    cent_negids = F.lit([-cid for cid, _ in cents])
-    pre = df.select(
-        F.col(id_col),
-        F.col(emb_col),
-        *[F.col(c) for c in keep_cols if c != emb_col],
-        norm(F.col(emb_col)).alias("_vn"),
-    )
-
-    def score_struct(i: Column) -> Column:
-        denom = cent_norms[i] * F.col("_vn")
-        d = dot(cent_mat[i], F.col(emb_col))
-        s = F.when(denom != 0, d / denom).cast(COS_Q)
-        return F.struct(s.alias("s"), cent_negids[i].alias("negid"))
-
-    structs = F.transform(
-        F.sequence(F.lit(0), F.lit(len(cents) - 1)), score_struct
-    )
-    top = F.slice(F.reverse(F.array_sort(structs)), 1, nprobe)
-    kept = [F.col(c) for c in keep_cols]
-    return (
-        pre.select(F.col(id_col), *kept, F.explode(top).alias("_t"))
-        .select(
-            F.col(id_col),
-            *kept,
-            (-F.col("_t.negid")).cast("int").alias("centroid_id"),
-        )
-    )
-
-
-def _assign_arrow(
-    df: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    nprobe: int,
-    id_col: str,
-    emb_col: str,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """mapInPandas assignment: per Arrow batch, ONE (n, d) @ (d, k)
-    matmul against the broadcast centroid matrix replaces n·k
-    interpreted HOF dot folds (CodegenFallback — the round-12
-    decomposition pinned these folds as ~100% of the semantic slice
-    e2e at 800k). Still a map-only pass: no shuffle, no join, the
-    centroids ride the closure exactly as the expr form's literals.
-
-    Bit-parity with the expr form, term by term:
-
-    * ``_vn`` is computed SPARK-side in the projection (same sqrt of
-      the same left fold), so denominators are bit-identical;
+    * ``_vn`` is computed SPARK-side in the projection (the same
+      ``functions.vectors.norm`` fold the oracle's cosine runs);
     * centroid norms use Python's left-to-right fold — the same IEEE
-      sequence as the expr form's driver-computed literals;
+      sequence as the SQL twin's list_sum;
     * the matmul dot differs from the fold only in summation ORDER
       (≲1e-15 relative); np_quantize_q4 recomputes any
       boundary-adjacent score through an EXACT left-fold replay +
@@ -1123,25 +847,29 @@ def _assign_arrow(
       sum is an exactly-representable integer (< 2⁵³), so even the
       raw matmul is bit-exact in any order;
     * ranking: stable argsort on (−score), columns pre-sorted by
-      centroid_id — score DESC, centroid_id ASC, the expr form's
-      reversed struct-sort order. Null scores (null/ragged embedding,
-      zero norm) become −inf: never picked over a real score, and an
-      all-null row still emits the smallest-cid probes, matching the
-      expr form's null-struct ordering (pytest-pinned).
-    """
-    import math
+      centroid_id. Null scores (null/ragged embedding, zero norm)
+      become −inf: never picked over a real score, and an all-null row
+      still emits the smallest-cid probes (NULLS LAST).
 
+    Pinned against the expression reference in
+    tests/similarity_reference.py."""
     from pyspark.sql import types as T
 
     from mapreduce_implementation_spark.functions.vectors import norm
 
+    cents = [
+        (int(r.centroid_id), [float(x) for x in r.centroid_emb])
+        for r in sorted(
+            centroids.select("centroid_id", "centroid_emb").collect(),
+            key=lambda r: r.centroid_id,
+        )
+    ]
+    if not cents:
+        raise ValueError("centroid set is empty; train or supply >= 1 centroid")
+
     ship_module_by_value()
 
-    cent_ids = [int(cid) for cid, _ in cents]
-    cent_vals = [[float(x) for x in c_emb] for _, c_emb in cents]
-    cent_norms = [
-        math.sqrt(sum(float(x) * float(x) for x in c_emb)) for _, c_emb in cents
-    ]
+    cent_ids, cent_vals, cent_norms = _centroid_table(cents)
 
     pre = df.select(
         F.col(id_col),
@@ -1184,21 +912,17 @@ def _assign_arrow(
 
 
 def _np_batch_order(embs, vn, cmat, cn, cent_vals, cent_norms, nprobe):
-    """The per-batch assignment core of :func:`_assign_arrow`, factored
-    out (r16) so the fused training-update kernel ranks with the EXACT
-    same arithmetic (matmul + np_quantize_q4 boundary replay + stable
-    argsort — see _assign_arrow's parity notes). Returns an (n, nprobe)
-    array of COLUMN indices into the caller's centroid arrays."""
+    """The per-batch assignment core of :func:`assign_inverted_lists`,
+    shared with the fused training-update kernel and the driver-side
+    probe assignment so all three rank with the EXACT same arithmetic
+    (matmul + np_quantize_q4 boundary replay + stable argsort — see
+    assign_inverted_lists' parity notes). Returns an (n, nprobe) array
+    of COLUMN indices into the caller's centroid arrays."""
     import numpy as np
 
     k, d = cmat.shape
-    n = len(vn)
-    ok = np.fromiter(
-        (e is not None and len(e) == d for e in embs), dtype=bool, count=n
-    ) & np.isfinite(vn)
-    m = np.zeros((n, d), dtype=np.float64)
-    for i in np.nonzero(ok)[0]:
-        m[i] = np.asarray(embs[i], dtype=np.float64)
+    ok, m = _stack_rows(embs, d)
+    ok &= np.isfinite(vn)
     denom = vn[:, None] * cn[None, :]
     with np.errstate(divide="ignore", invalid="ignore"):
         cos = np.where(
@@ -1248,29 +972,25 @@ def _train_sums_arrow(df: DataFrame, cents, emb_col: str = "ev") -> DataFrame:
     transfer and the explode/hash-agg pass grow with N while the
     information content is k×d integers per task.
 
-    Parity with the unfused path, term by term: the ranking is
+    Parity with the unfused path (assign_inverted_lists carrying the
+    vector, posexplode, groupBy sums), term by term: the ranking is
     :func:`_np_batch_order` — the byte-identical assignment core
-    _assign_arrow uses; the sums are int64 adds of the same micro-unit
+    assign_inverted_lists uses; the sums are int64 adds of the same micro-unit
     values posexplode summed (exact integers, any order; np.int64
     wraps like the JVM long); a NULL vector contributes nothing
     (posexplode of NULL emits no rows) while a short/ragged vector
     contributes each element at its position — exactly the exploded
     semantics. Pinned by tests/test_similarity.py
-    (test_train_centroids_impl_invariant + the oracle-replayed Lloyd
-    rows)."""
-    import math
-
+    (test_train_centroids_null_element_vector_parity against that
+    unfused form, test_train_centroids_impl_invariant, and the
+    oracle-replayed Lloyd rows)."""
     from pyspark.sql import types as T
 
     from mapreduce_implementation_spark.functions.vectors import norm
 
     ship_module_by_value()
 
-    cent_ids = [int(cid) for cid, _ in cents]
-    cent_vals = [[float(x) for x in c_emb] for _, c_emb in cents]
-    cent_norms = [
-        math.sqrt(sum(float(x) * float(x) for x in c_emb)) for _, c_emb in cents
-    ]
+    cent_ids, cent_vals, cent_norms = _centroid_table(cents)
 
     pre = df.select(F.col(emb_col), norm(F.col(emb_col)).alias("_vn"))
     out_schema = T.StructType(
@@ -1813,16 +1533,9 @@ def _assign_rows_local(
     ``(query_id, emb as float list, centroid_id)`` tuples — one per
     (query, probed list), the same rows the Spark-side
     assign_inverted_lists(keep_cols=(emb,)) collect produced."""
-    import math
-
     import numpy as np
 
-    cent_ids = [int(cid) for cid, _ in cents]
-    cent_vals = [[float(x) for x in c_emb] for _, c_emb in cents]
-    cent_norms = [
-        math.sqrt(sum(float(x) * float(x) for x in c_emb))
-        for _, c_emb in cents
-    ]
+    cent_ids, cent_vals, cent_norms = _centroid_table(cents)
     n = len(qrows)
     if n == 0:
         return []

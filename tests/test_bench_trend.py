@@ -42,6 +42,9 @@ def baseline(tmp_path, monkeypatch):
     p = tmp_path / "BASELINE.md"
     p.write_text(TABLE)
     monkeypatch.setenv("SPARK_GRAFT_ROUND", "14")
+    # pin the default core count: the append is skipped on any other
+    # (test_non_default_core_run_skips_append covers that path)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     return str(p)
 
 
@@ -77,6 +80,7 @@ def test_non_default_core_run_skips_append(baseline, monkeypatch):
 
 def test_missing_table_raises(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_ROUND", "14")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     p = tmp_path / "BASELINE.md"
     p.write_text("no table here\n")
     with pytest.raises(RuntimeError, match="trend table"):

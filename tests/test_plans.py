@@ -212,6 +212,69 @@ def test_signature_family_selects_one_kernel(spark):
     assert python_nodes(dd.simhash_signatures(docs)) == ["MapInPandasExec"]
 
 
+def test_assignment_operators_select_one_kernel(spark):
+    """Each IVF/SRP assignment operator plans exactly one kernel: one
+    MapInPandas for flat, two-level and SRP assignment and for one
+    Lloyd update; the two-level kernel plans no broadcast join and no
+    aggregate. None of the implementation knobs is a parameter."""
+    import inspect
+
+    from mapreduce_implementation_spark.operators import semantic
+    from mapreduce_implementation_spark.operators import similarity as sim
+    from mapreduce_implementation_spark.plans.audit import _walk_physical_nodes
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, None)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "centroid_id int, centroid_emb array<double>",
+    )
+    fine = spark.createDataFrame(
+        [(0, 0, [1.0, 0.1]), (1, 2, [0.1, 1.0])],
+        "coarse_id int, centroid_id int, centroid_emb array<double>",
+    )
+    planes = cents.withColumnsRenamed(
+        {"centroid_id": "plane_id", "centroid_emb": "plane_emb"}
+    )
+
+    def nodes(df):
+        return [
+            n.getClass().getSimpleName()
+            for n in _walk_physical_nodes(df._jdf.queryExecution().executedPlan())
+        ]
+
+    update = (
+        sim._train_sums_arrow(vecs, [(0, [1, 0]), (1, [0, 1])], "embedding")
+        .groupBy("centroid_id", "pos")
+        .agg({"s": "sum", "n": "sum"})
+    )
+    two_level = nodes(sim.assign_two_level(vecs, cents, fine))
+    for plan in (
+        nodes(sim.assign_inverted_lists(vecs, cents, 2)),
+        two_level,
+        nodes(sim._with_buckets(vecs, planes, "vec_id", "embedding")),
+        nodes(update),
+    ):
+        assert plan.count("MapInPandasExec") == 1, plan
+    assert not any(
+        "BroadcastHashJoin" in n or "HashAggregate" in n for n in two_level
+    ), two_level
+
+    gone = {
+        sim.assign_inverted_lists: "impl",
+        sim.assign_two_level: "impl",
+        sim._with_buckets: "impl",
+        sim.train_centroids: "assign_impl",
+        sim.train_two_level_centroids: "assign_impl",
+        semantic.semantic_dedup: "assign_impl",
+    }
+    for fn, param in gone.items():
+        assert param not in inspect.signature(fn).parameters, fn.__name__
+    assert not hasattr(sim, "_assign_from_list")
+
+
 def test_bucketed_join_avoids_shuffle(spark, oracle_sf_dir):
     """Co-located join via bucketing: both tables bucketed+sorted on the
     join key → SortMergeJoin with NO exchange on either side. At 100 TB

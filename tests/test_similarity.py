@@ -8,6 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, IntegerType, StructField, StructType
+from similarity_reference import assign_reference, buckets_reference
 
 from mapreduce_implementation_spark.operators import similarity as sim
 
@@ -515,7 +516,8 @@ def test_sampled_training_probe_recall_parity(spark, vectors):
 
 
 # ---------------------------------------------------------------------------
-# round 13: arrow (mapInPandas matmul) assignment vs the expression form
+# round 13: arrow (mapInPandas matmul) kernels vs their expression
+# references (tests/similarity_reference.py)
 # ---------------------------------------------------------------------------
 
 
@@ -555,36 +557,39 @@ def test_assign_arrow_expr_parity(
 ):
     """The arrow kernel's quantized argmax (ties → smaller centroid_id,
     null scores → −inf, all-null rows → smallest cids) must equal the
-    expression form row for row, nprobe over- and under-subscribed."""
-    a = sim.assign_inverted_lists(
-        adversarial_vectors, adversarial_centroids, nprobe, impl="expr"
+    crossJoin + ROW_NUMBER expression reference row for row, nprobe
+    over- and under-subscribed."""
+    a = assign_reference(
+        adversarial_vectors, adversarial_centroids, nprobe
     ).collect()
     b = sim.assign_inverted_lists(
-        adversarial_vectors, adversarial_centroids, nprobe, impl="arrow"
+        adversarial_vectors, adversarial_centroids, nprobe
     ).collect()
     assert sorted((r.vec_id, r.centroid_id) for r in a) == sorted(
         (r.vec_id, r.centroid_id) for r in b
     )
+    # NULL, zero and ragged rows score NULL everywhere: smallest cids
+    want = list(range(min(nprobe, 6)))
+    for vid in (300, 301, 302):
+        assert sorted(r.centroid_id for r in b if r.vec_id == vid) == want
 
 
 def test_assign_arrow_keep_cols_and_micro_parity(
     spark, adversarial_vectors, adversarial_centroids
 ):
     """keep_cols passthrough (including the embedding itself) and the
-    integer-micro Lloyd input shape are both impl-invariant."""
-    a = sim.assign_inverted_lists(
+    integer-micro Lloyd input shape both match the reference."""
+    a = assign_reference(
         adversarial_vectors,
         adversarial_centroids,
         1,
         keep_cols=("embedding",),
-        impl="expr",
     ).collect()
     b = sim.assign_inverted_lists(
         adversarial_vectors,
         adversarial_centroids,
         1,
         keep_cols=("embedding",),
-        impl="arrow",
     ).collect()
 
     def key(rs):
@@ -608,30 +613,29 @@ def test_assign_arrow_keep_cols_and_micro_parity(
             F.col("centroid_emb"), lambda v: F.round(v * 1e6).cast("long")
         ).alias("centroid_emb"),
     )
-    a = sim.assign_inverted_lists(vq, cq, 1, emb_col="ev", impl="expr").collect()
-    b = sim.assign_inverted_lists(vq, cq, 1, emb_col="ev", impl="arrow").collect()
+    a = assign_reference(vq, cq, 1, emb_col="ev").collect()
+    b = sim.assign_inverted_lists(vq, cq, 1, emb_col="ev").collect()
     assert sorted((r.vec_id, r.centroid_id) for r in a) == sorted(
         (r.vec_id, r.centroid_id) for r in b
     )
 
 
 def test_train_centroids_impl_invariant(spark, vectors):
-    """Lloyd over the arrow assignment (the default) must reproduce the
-    expr-era centroids bit for bit: on integer-micro inputs every
-    product/partial sum is an exactly representable integer, so the
-    matmul IS the fold."""
+    """Lloyd's matmul assignment must equal the fold-based expression
+    reference bit for bit on the trained centroids: on integer-micro
+    inputs every product/partial sum is an exactly representable
+    integer, so the matmul IS the fold."""
     got = sorted(
         map(tuple, sim.train_centroids(vectors, k=3, iters=3).collect())
     )
-    # the arrow path is the default inside train_centroids; recompute
-    # the final assignment both ways and compare the cluster sums the
-    # next iteration would see
+    # recompute the final assignment both ways and compare the cluster
+    # membership the next iteration would see
     cents = spark.createDataFrame(
         [(c, list(e)) for c, e in got], "centroid_id int, centroid_emb array<long>"
     )
     vq = vectors.select("vec_id", sim.quantize_micro("embedding").alias("ev"))
-    a = sim.assign_inverted_lists(vq, cents, 1, emb_col="ev", impl="expr").collect()
-    b = sim.assign_inverted_lists(vq, cents, 1, emb_col="ev", impl="arrow").collect()
+    a = assign_reference(vq, cents, 1, emb_col="ev").collect()
+    b = sim.assign_inverted_lists(vq, cents, 1, emb_col="ev").collect()
     assert sorted((r.vec_id, r.centroid_id) for r in a) == sorted(
         (r.vec_id, r.centroid_id) for r in b
     )
@@ -683,8 +687,12 @@ def test_train_centroids_null_element_vector_parity(spark):
             .collect(),
         )
     )
-    assigned = sim._assign_from_list(
-        vq, cents, 1, "vec_id", "ev", keep_cols=("ev",), impl="expr"
+    assigned = sim.assign_inverted_lists(
+        vq,
+        spark.createDataFrame(cents, "centroid_id int, centroid_emb array<long>"),
+        1,
+        emb_col="ev",
+        keep_cols=("ev",),
     )
     unfused = sorted(
         map(
@@ -715,7 +723,6 @@ def test_assign_rows_local_matches_spark_assignment(
         adversarial_centroids,
         nprobe,
         keep_cols=("embedding",),
-        impl="arrow",
     ).collect()
     cents = [
         (int(r.centroid_id), [float(x) for x in r.centroid_emb])
@@ -791,7 +798,7 @@ def test_srp_bucketing_arrow_expr_parity(
     spark, adversarial_vectors, adversarial_centroids
 ):
     """Round-13: the matmul bucketing kernel must reproduce the
-    expression form's bucket string bit for bit — including the
+    expression reference's bucket string bit for bit — including the
     all-zeros bucket for null/ragged embeddings (null dot →
     otherwise('0')) and the all-ones bucket for zero vectors
     (0.0 ≥ 0)."""
@@ -799,27 +806,25 @@ def test_srp_bucketing_arrow_expr_parity(
         F.col("centroid_id").alias("plane_id"),
         F.col("centroid_emb").alias("plane_emb"),
     )
-    a = sim._with_buckets(
-        adversarial_vectors, planes, "vec_id", "embedding", impl="expr"
+    a = buckets_reference(
+        adversarial_vectors, planes, "vec_id", "embedding"
     ).collect()
     b = sim._with_buckets(
-        adversarial_vectors, planes, "vec_id", "embedding", impl="arrow"
+        adversarial_vectors, planes, "vec_id", "embedding"
     ).collect()
     ba = {r.vec_id: r.bucket for r in a}
     bb = {r.vec_id: r.bucket for r in b}
     assert ba == bb
-    assert ba[300] == "0" * 6  # null embedding
-    assert ba[302] == "0" * 6  # ragged embedding
-    assert ba[301] == "1" * 6  # zero vector
+    assert bb[300] == "0" * 6  # null embedding
+    assert bb[302] == "0" * 6  # ragged embedding
+    assert bb[301] == "1" * 6  # zero vector
 
     # keep_emb passthrough parity
-    a = sim._with_buckets(
-        adversarial_vectors, planes, "vec_id", "embedding",
-        keep_emb=True, impl="expr",
+    a = buckets_reference(
+        adversarial_vectors, planes, "vec_id", "embedding", keep_emb=True
     ).collect()
     b = sim._with_buckets(
-        adversarial_vectors, planes, "vec_id", "embedding",
-        keep_emb=True, impl="arrow",
+        adversarial_vectors, planes, "vec_id", "embedding", keep_emb=True
     ).collect()
 
     def key(rs):

@@ -8,6 +8,7 @@ import math
 
 import pytest
 from pyspark.sql import functions as F
+from similarity_reference import assign_two_level_reference
 
 from mapreduce_implementation_spark.operators import similarity as sim
 
@@ -113,10 +114,10 @@ def test_semantic_dedup_over_two_level_assignment(spark, hierarchy):
 
 def test_assign_two_level_impl_parity(spark, hierarchy):
     """Round 13: the fused arrow kernel (coarse matmul + per-cell fine
-    matmul, map-only) must equal the expr form (literal argmax +
-    broadcast join + max-struct agg) row for row — including null and
-    zero-vector rows, which take their cell's smallest fine id under
-    both forms."""
+    matmul, map-only) must equal the expression reference (flat
+    ROW_NUMBER argmax over coarse, then over the chosen cell's fine
+    rows) row for row — including null and zero-vector rows, which
+    take the smallest cell's smallest fine id."""
     vecs, coarse, fine = hierarchy
     from pyspark.sql.types import (
         ArrayType,
@@ -138,9 +139,12 @@ def test_assign_two_level_impl_parity(spark, hierarchy):
     allv = vecs.select(
         F.col("vec_id").cast("int").alias("vec_id"), "embedding"
     ).unionByName(extra)
-    a = sim.assign_two_level(allv, coarse, fine, impl="expr").collect()
-    b = sim.assign_two_level(allv, coarse, fine, impl="arrow").collect()
+    a = assign_two_level_reference(allv, coarse, fine).collect()
+    b = sim.assign_two_level(allv, coarse, fine).collect()
     assert sorted((r.vec_id, r.centroid_id) for r in a) == sorted(
         (r.vec_id, r.centroid_id) for r in b
     )
     assert len(b) == allv.count()
+    # coarse ids start at 0 and fine ids are coarse_id * k_fine + rank
+    got = {r.vec_id: r.centroid_id for r in b}
+    assert got[900001] == got[900002] == 0
