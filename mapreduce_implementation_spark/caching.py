@@ -25,32 +25,17 @@ def track_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-def _persistent_rdd_entries(sc):
-    out = []
-    it = sc._jsc.getPersistentRDDs().entrySet().iterator()
-    while it.hasNext():
-        out.append(it.next())
-    return out
-
-
 def track_local_checkpoint(df: DataFrame) -> DataFrame:
     """``df.localCheckpoint(eager=True)`` + register the materialized
     blocks for deferred release (r17). ``DataFrame.unpersist()`` is a
     CacheManager call and does NOT free localCheckpoint blocks (they
     belong to the underlying RDD, normally reclaimed only by GC-driven
-    ContextCleaner) — so the JVM RDD handles persisted BY this
-    checkpoint are captured via a before/after diff of
-    ``getPersistentRDDs`` and unpersisted explicitly in
-    ``release_caches``. Single-threaded build context assumed (the
-    query registry's, where release runs on entry to each query)."""
-    sc = df.sparkSession.sparkContext
-    before = {e.getKey() for e in _persistent_rdd_entries(sc)}
+    ContextCleaner) — so the checkpoint's own JVM RDD, the one its
+    ``LogicalRDD`` plan reads, is registered and unpersisted
+    explicitly in ``release_caches``. An RDD another thread persists
+    meanwhile is never captured."""
     chk = df.localCheckpoint(eager=True)
-    _LIVE_RDDS.extend(
-        e.getValue()
-        for e in _persistent_rdd_entries(sc)
-        if e.getKey() not in before
-    )
+    _LIVE_RDDS.append(chk._jdf.logicalPlan().rdd())
     return chk
 
 

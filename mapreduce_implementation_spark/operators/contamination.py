@@ -87,7 +87,6 @@ def duplicate_span_stats(
     *,
     sample_rate: int | None = None,
     heavy_hitter_support: float | None = 0.001,
-    span_impl: str = "fused",
 ) -> DataFrame:
     """Substring-level SELF-duplication: per document, the fraction of
     its distinct word-``n``-grams that appear verbatim in at least one
@@ -134,48 +133,17 @@ def duplicate_span_stats(
     the right trade against shuffling span strings (tighten to the
     md5 hex the other miners use if exactness ever matters).
 
-    ``span_impl`` (round 14; fused default round 16) picks how the
-    span hashes are produced:
-
-    * ``"fused"`` (default, round 16) — the tokhash chain computed in
-      ONE vectorized mapInPandas pass (functions/xxh64np.py): the JVM
-      keeps tokenize + per-token ``xxhash64``; the Arrow transfer
-      carries the token-hash arrays and numpy replays the
-      ``xxhash64``-over-slice chain bit-for-bit (n hashLong passes
-      over the flat gram vector) with a lexsort per-doc distinct —
-      the per-position 20-long slice allocation and the interpreted
-      slice-hash HOF never run. SAME hash family and (id, h) multiset
-      as ``"tokhash"`` (parity pytest-pinned, exact and sampled
-      modes). Measured fresh-process interleaved min-of-3 at 4M
-      rehearsal docs, full operator, n=20 (BASELINE.md r16
-      continued): tokhash 118.79 s → fused 52.65 s (**2.26×**),
-      digests identical on all six lines.
-    * ``"tokhash"`` (the pre-r16 default; now the JVM expression
-      reference arm) — hash each TOKEN once to int64, then
-      each span hash is ``xxhash64`` of the n-long token-hash SLICE.
-      No 20-word concat string is ever built: per span the engine
-      allocates one n-long slice instead of constructing a
-      ~hundreds-of-bytes string, and the per-doc distinct runs over
-      fixed-width longs instead of variable strings. Measured
-      interleaved min-of-2 at 4M rehearsal docs (span explode +
-      holder agg): string 179.1 s → tokhash 62.2 s (**2.9×**); the
-      full operator (both tokenize branches) 289.0 → 110.8 s
-      (**2.6×**). The
-      dup/unique classification is value-identical up to the SAME
-      64-bit collision contract as above, with one addition: a
-      WITHIN-doc collision (two distinct spans of one doc hashing
-      equal) now merges them in the per-doc distinct (~spans²/2⁶⁵ —
-      vanishing; the string form computed within-doc distinctness
-      exactly). Parity is pytest-pinned exact on the test corpora.
-    * ``"string"`` — the concat-and-hash pre-r14 form, RETIRED to
-      tests-only (round-15 verdict item 7): after the clean 8M
-      re-measure under tokhash (269.8 s vs the r14 string 707 s —
-      the projected 2.6× exactly, raw 4M→8M exponent 1.1, and the
-      r14 JVM GCLocker allocation warnings GONE: the humongous
-      concat-string allocations were their source), the A/B arm has
-      served its purpose. It remains only as the parity oracle in
-      tests/test_contamination.py; production callers should never
-      pass it.
+    The span hashes come from one fused mapInArrow kernel
+    (:func:`_span_hashes_fused`): the JVM keeps tokenize + per-token
+    ``xxhash64``, and numpy replays the ``xxhash64``-over-slice chain
+    bit-for-bit with a lexsort per-doc distinct. It measured 2.26×
+    over the JVM slice-hash expression at 4M docs (BASELINE.md r16),
+    which in turn measured 2.6× over concat-and-hash (r14). Both
+    expression forms live on as test references
+    (tests/span_reference.py), fed through the same aggregation tail
+    (:func:`_span_stats`). A WITHIN-doc collision (two distinct spans
+    of one doc hashing equal) merges them in the per-doc distinct —
+    ~spans²/2⁶⁵, vanishing.
 
     ``sample_rate=m`` (round-10 verdict item 7) keeps only spans with
     ``pmod(span_hash, m) == 0`` — ~1/m of spans, sampled by CONTENT
@@ -235,58 +203,47 @@ def duplicate_span_stats(
             f"heavy_hitter_support must be in (0, 1) or None, got "
             f"{heavy_hitter_support}"
         )
-    if span_impl not in ("fused", "tokhash", "string"):
-        raise ValueError(
-            f"span_impl must be 'fused', 'tokhash' or 'string', "
-            f"got {span_impl!r}"
-        )
-    if span_impl in ("fused", "tokhash"):
-        from mapreduce_implementation_spark.functions.text import tokens
+    return _span_stats(
+        _span_hashes(docs, id_col, text_col, n),
+        id_col,
+        sample_rate,
+        heavy_hitter_support,
+    )
 
-        # staged projections (one expensive expression per step — the
-        # minhash_signatures staging rule): tokens → token hashes →
-        # per-doc distinct span hashes over n-long slices
-        th_staged = (
-            spread(docs.select(F.col(id_col), F.col(text_col)))
-            .select(
-                F.col(id_col),
-                tokens(F.lower(F.col(text_col)), mode="simple").alias("_t"),
-            )
-            .select(
-                F.col(id_col),
-                F.transform(
-                    F.col("_t"), lambda t: F.xxhash64(t)
-                ).alias("_th"),
-            )
+
+def _span_hashes(
+    docs: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """Per-doc DISTINCT span hashes as exploded ``(id_col, h)`` rows.
+    Staged projections (one expensive expression per step — the
+    minhash_signatures staging rule): tokens → per-token ``xxhash64``
+    → the fused slice-hash kernel."""
+    from mapreduce_implementation_spark.functions.text import tokens
+
+    th_staged = (
+        spread(docs.select(F.col(id_col), F.col(text_col)))
+        .select(
+            F.col(id_col),
+            tokens(F.lower(F.col(text_col)), mode="simple").alias("_t"),
         )
-        if span_impl == "fused":
-            spans = _span_hashes_fused(th_staged, id_col, n)
-        else:
-            spans = th_staged.select(
-                F.col(id_col),
-                F.explode(
-                    F.when(
-                        F.size(F.col("_th")) >= n,
-                        F.array_distinct(
-                            F.transform(
-                                F.sequence(
-                                    F.lit(0), F.size(F.col("_th")) - F.lit(n)
-                                ),
-                                lambda i: F.xxhash64(
-                                    F.slice(F.col("_th"), i + 1, n)
-                                ),
-                            )
-                        ),
-                    ).otherwise(F.array().cast("array<long>"))
-                ).alias("h"),
-            )
-    else:
-        sp = shingles(text_col, n)
-        base = spread(docs)
-        spans = base.select(
-            F.col(id_col), F.explode(sp).alias("span")
-        ).select(F.col(id_col), F.xxhash64("span").alias("h"))
-    scale = 1 if sample_rate is None else sample_rate
+        .select(
+            F.col(id_col),
+            F.transform(F.col("_t"), lambda t: F.xxhash64(t)).alias("_th"),
+        )
+    )
+    return _span_hashes_fused(th_staged, id_col, n)
+
+
+def _span_stats(
+    spans: DataFrame,
+    id_col: str,
+    sample_rate: int | None,
+    heavy_hitter_support: float | None,
+) -> DataFrame:
+    """The aggregation tail of duplicate_span_stats over per-doc
+    distinct ``(id_col, h)`` span-hash rows: optional content-hash
+    sampling with the heavy-hitter stratum, then the holder-count and
+    per-doc totals aggregations."""
     # weight of a kept span in the per-doc totals: 1 in exact mode,
     # the rate in single-stratum sampled mode, per-stratum (1 heavy /
     # m tail) in hybrid mode — the weighted sums below replace the
@@ -362,7 +319,7 @@ def duplicate_span_stats(
         "n_spans",
         "n_dup_spans",
         "dup_span_frac",
-        F.lit(scale).alias("span_sample_rate"),
+        F.lit(sample_rate).alias("span_sample_rate"),
     )
 
 
@@ -375,10 +332,10 @@ def _span_hashes_fused(
     ``xxhash64(slice(_th, i, n))`` chain bit-for-bit in vectorized
     numpy (functions/xxh64np.py) — the per-position slice allocation
     and the interpreted slice-hash HOF, the dominant stage of the
-    tokhash span explode at n=20, never run on the JVM. Same hash
-    family, same (id, h) multiset as the tokhash arm (parity
-    pytest-pinned in tests/test_contamination.py), so the downstream
-    holder-count aggregation is untouched.
+    JVM slice-hash explode at n=20, never run. Same hash family, same
+    (id, h) multiset as that expression
+    (tests/span_reference.py::tokhash_span_hashes; parity pinned in
+    tests/test_contamination.py).
 
     mapInArrow, not mapInPandas (the _minhash_sig_fused lesson,
     measured there at 1.41×): the ListArray's flat int64 buffer +
@@ -391,8 +348,7 @@ def _span_hashes_fused(
     neighbor-difference mask — vectorized, unlike np.unique per doc.
     Docs with fewer than ``n`` tokens emit no rows (the explode
     contract). The full 64-bit domain is kept (no mod reduction) —
-    span identity wants the lowest collision rate, exactly as the
-    expression arm."""
+    span identity wants the lowest collision rate."""
     from pyspark import cloudpickle
     from pyspark.sql import types as T
 

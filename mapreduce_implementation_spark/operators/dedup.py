@@ -188,12 +188,12 @@ def shingle_ints_from_token_hashes(
 ) -> Column:
     """Distinct shingle int64s DIRECTLY from token-hash slices — no
     shingle string is ever materialized (round-15 verdict item 1: the
-    ``span_impl="tokhash"`` kernel from operators/contamination.py
-    applied to the signature chain, where the r14 decomposition
-    measured tokenize + ngram-concat + array_distinct-over-strings at
-    ~20.5 s of the ~31 s 1M-doc build while the strong hash itself was
-    ~1 s). Each n-gram hashes as xxhash64 over the n-long int64 slice
-    of ``th``; ``mod_p`` reduces into [0, MERSENNE_P) — the MinHash
+    token-hash-slice span hash of operators/contamination.py applied
+    to the signature chain, where the r14 decomposition measured
+    tokenize + ngram-concat + array_distinct-over-strings at ~20.5 s
+    of the ~31 s 1M-doc build while the strong hash itself was ~1 s).
+    Each n-gram hashes as xxhash64 over the n-long int64 slice of
+    ``th``; ``mod_p`` reduces into [0, MERSENNE_P) — the MinHash
     permutation domain (same SHAPE as :func:`shingle_ints`, different
     VALUES: tokhash is its own signature family, incompatible with the
     md5-over-strings build — both sides of any banded or cross-set
@@ -248,20 +248,6 @@ def minhash_signature(shingle_col: Column, k: int = 16) -> Column:
     )
 
 
-def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Array of (band_id, band_hash) structs: md5 over each r-slice of
-    the signature."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda j: F.struct(
-            j.cast("int").alias("band_id"),
-            F.md5(F.concat_ws("|", F.slice(sig, j * rows + 1, rows)).cast("binary")).alias(
-                "band_hash"
-            ),
-        ),
-    )
-
-
 def _validate_minhash_bands(k: int, bands: int, rows: int) -> None:
     if bands * rows != k:
         raise ValueError(
@@ -279,12 +265,13 @@ def band_hashes_column(bands: int, rows: int) -> str:
 
 
 def band_hashes(sig: Column, bands: int, rows: int) -> Column:
-    """Positional band-hash array (band_id = array position): the same
-    md5-over-slice values as :func:`lsh_bands`, NULL for NULL
-    signatures. Computed ONCE at signature-table write time
-    (``minhash_signatures(with_bands=...)``) it replaces the three
-    runtime band-hash evaluations a miner build otherwise pays (the
-    counts job + both sides of the band self-join) — guide §2.3
+    """Positional band-hash array (band_id = array position): md5 over
+    the ``|``-joined r-slice of the signature per band, NULL for NULL
+    signatures — the one banding expression. Computed ONCE at
+    signature-table write time (``minhash_signatures(with_bands=...)``)
+    it replaces the three runtime band-hash evaluations a miner build
+    otherwise pays (the counts job + both sides of the band self-join)
+    — guide §2.3
     "shuffle keys and metadata instead of [re-deriving them]"."""
     return F.when(
         sig.isNotNull(),
@@ -333,19 +320,12 @@ def _minhash_banded(
             F.posexplode(F.col(pre)).alias("band_id", "band_hash"),
             *extra,
         )
-    return (
-        sigs.where(F.col("sig").isNotNull())
-        .select(
-            F.col("doc_id").alias(out_id),
-            F.explode(lsh_bands(F.col("sig"), bands, rows)).alias("b"),
-            *extra,
-        )
-        .select(
-            out_id,
-            F.col("b.band_id").alias("band_id"),
-            F.col("b.band_hash").alias("band_hash"),
-            *extra,
-        )
+    return sigs.where(F.col("sig").isNotNull()).select(
+        F.col("doc_id").alias(out_id),
+        F.posexplode(band_hashes(F.col("sig"), bands, rows)).alias(
+            "band_id", "band_hash"
+        ),
+        *extra,
     )
 
 
@@ -1761,14 +1741,16 @@ def connected_components_star(
     contraction — O(log n) rounds instead of min-label propagation's
     O(component diameter), so a 10^6-hop chain labels in ~20 bounded
     shuffles at 100 TB. Each round is two groupBy aggregations + a
-    distinct; ``localCheckpoint`` truncates lineage per round.
+    distinct; ``localCheckpoint`` truncates lineage per round. Raises
+    RuntimeError when the edge list still changes after
+    ``max_rounds`` rounds: unconverged labels are wrong labels.
 
     Returns (doc_id, cluster_id) with cluster_id = min id of the
-    component, matching the other implementations exactly."""
+    component, matching the driver union-find path exactly."""
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # nodes come from the UNFILTERED edge list: a node whose only edge is
     # a self-loop must still appear (own-label singleton), matching the
-    # union-find and label-propagation paths.
+    # driver union-find path.
     nodes = (
         raw.select("u").union(raw.select(F.col("v").alias("u"))).distinct()
     )
@@ -1804,7 +1786,6 @@ def connected_components(
     dst: str = "doc_b",
     max_iterations: int = 25,
     local_threshold: int = 1_000_000,
-    distributed_algorithm: str = "star",
 ) -> DataFrame:
     """Connected components of the near-dup pair graph → duplicate
     CLUSTERS: ``(doc_id, cluster_id)`` with cluster_id = min doc id in
@@ -1821,22 +1802,17 @@ def connected_components(
     come from, and the int64 vertex/label arrays. The default threshold
     is 1M pairs: 1M edges over 1.5M vertices measured +136 MiB of peak
     driver Python RSS on a 4-core host, comfortably inside a modest
-    cluster driver. Above the threshold, ``distributed_algorithm``
-    picks the cluster path:
-
-    * ``"star"`` (default): alternating large-star/small-star
-      contraction (connected_components_star) — O(log n) rounds
-      regardless of component diameter.
-    * ``"label-propagation"``: iterative min-label propagation (the
-      Pregel pattern as DataFrame joins), one shuffle join + min-agg
-      per round, O(diameter) rounds — fine for shallow near-dup
-      clusters, kept for comparison/fallback.
+    cluster driver. Above the threshold, alternating
+    large-star/small-star contraction (connected_components_star)
+    labels it in O(log n) rounds regardless of component diameter;
+    ``max_iterations`` bounds those rounds, and it raises RuntimeError
+    rather than return unconverged labels.
 
     Raises ValueError when any edge has a NULL ``src`` or ``dst``
     endpoint, on every path: a NULL id names no document.
     """
     # persist: the edge pipeline (LSH join + verify) is consumed 2×
-    # here (stats + collect) or once per iteration in the loop
+    # here (stats + collect, or stats + star contraction)
     edges = edges.persist()
     stats = edges.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1864,60 +1840,12 @@ def connected_components(
             pa.table({"doc_id": verts, "cluster_id": labels}),
             "doc_id long, cluster_id long",
         )
-    if distributed_algorithm == "star":
-        out = connected_components_star(edges, src, dst, max_rounds=max_iterations)
+    try:
+        return connected_components_star(
+            edges, src, dst, max_rounds=max_iterations
+        )
+    finally:
         edges.unpersist()
-        return out
-    if distributed_algorithm != "label-propagation":
-        raise ValueError(
-            f"unknown distributed_algorithm {distributed_algorithm!r}"
-        )
-    sym = edges.select(F.col(src).alias("v"), F.col(dst).alias("n")).union(
-        edges.select(F.col(dst).alias("v"), F.col(src).alias("n"))
-    )
-    labels = sym.select("v").distinct().withColumn("label", F.col("v"))
-    labels = labels.localCheckpoint()
-    changed = -1
-    for _ in range(max_iterations):
-        neigh = (
-            sym.join(
-                labels.select(
-                    F.col("v").alias("n"), F.col("label").alias("n_label")
-                ),
-                "n",
-            )
-            .groupBy("v")
-            .agg(F.min("n_label").alias("min_neigh"))
-        )
-        new_labels = (
-            labels.join(neigh, "v", "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("label"), F.coalesce("min_neigh", "label")
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.select(F.col("v"), F.col("label").alias("new_label"))
-            .join(labels, "v")
-            .where(F.col("new_label") != F.col("label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        # Unconverged labels are WRONG labels (components still merging);
-        # never return them as if they were final.
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            f"iterations ({changed} labels still changing); raise "
-            "max_iterations or switch to large-star/small-star"
-        )
-    return labels.select(F.col("v").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 def ngram_jaccard_pairs(
@@ -2469,20 +2397,7 @@ def minhash_banded_frame(
     the signature is duplicated ``bands`` times (k small ints — cheap
     vs re-shuffling the corpus every batch)."""
     _validate_minhash_bands(k, bands, rows)
-    return (
-        sigs.where(F.col("sig").isNotNull())
-        .select(
-            "doc_id",
-            F.explode(lsh_bands(F.col("sig"), bands, rows)).alias("b"),
-            "sig",
-        )
-        .select(
-            "doc_id",
-            F.col("b.band_id").alias("band_id"),
-            F.col("b.band_hash").alias("band_hash"),
-            "sig",
-        )
-    )
+    return _minhash_banded(sigs, "doc_id", bands, rows, keep_sig=True)
 
 
 def minhash_cross_near_dup(

@@ -175,8 +175,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge-count threshold the pair list is collected as one Arrow
     batch and labeled by a vectorized numpy union-find on the driver
     (one collect), large-star/small-star contraction above it (O(log n)
-    bounded shuffles); min-label propagation is kept only as an opt-in
-    fallback. The DuckDB twin is a recursive reachability CTE. Pair
+    bounded shuffles). The DuckDB twin is a recursive reachability CTE. Pair
     emission reads the same materialized signature artifact layout as
     minhash_near_dup_pairs."""
     docs = load_table(spark, sf_dir, "documents")

@@ -451,8 +451,8 @@ DUP_SPAN_ORACLE = f"""
 @register("duplicate_ngram_spans", tables=("documents",), oracle=DUP_SPAN_ORACLE)
 def duplicate_span_stats_parity(spark, sf_dir):
     """Per-doc fraction of distinct 20-word spans appearing verbatim in
-    another document (the substring-dedup signal — hashed spans, one
-    window-counted shuffle, single corpus pass; operators/
+    another document (the substring-dedup signal — hashed spans,
+    partial-agg holder counts, no window; operators/
     contamination.duplicate_span_stats)."""
     from mapreduce_implementation_spark.operators.contamination import (
         duplicate_span_stats,

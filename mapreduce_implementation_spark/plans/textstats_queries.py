@@ -119,11 +119,11 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel 1.97 s (12.3×); a wash at sf0.1 where the row is
     overhead-bound (0.52 s both arms, OPTIMIZATION_r17.md). The
     ratio/score arithmetic is UNCHANGED JVM expressions over those
-    integers, so the float surface is identical to the expr arm
-    (``doc_quality_expr`` below — kept as the parity A/B reference,
-    pinned in tests/test_textstats_kernel.py incl. NULL/empty/unicode
-    rows). spread() since r16 (single-row-group sf files scan as ONE
-    task; no-op at scale)."""
+    integers, so the float surface is identical to the expr form
+    (tests/textstats_reference.py::doc_quality_expr, pinned in
+    tests/test_textstats_kernel.py incl. NULL/empty/unicode rows).
+    spread() since r16 (single-row-group sf files scan as ONE task;
+    no-op at scale)."""
     docs = load_table(spark, sf_dir, "documents")
     staged = ts.token_stats_arrow(
         spread(docs.select("doc_id", "text")), "doc_id", "text"
@@ -147,37 +147,6 @@ def _quality_from_token_stats(staged: DataFrame) -> DataFrame:
         (F.col("tok_chars").cast("double") / gt).alias("mean_token_len"),
         (F.col("n_distinct").cast("double") / gt).alias("distinct_token_ratio"),
         (F.col("top_cnt").cast("double") / gt).alias("top_token_frac"),
-    )
-    score = ts.quality_score_from(
-        {k: F.col(k) for k in ("n_tokens", "mean_token_len", "punct_ratio",
-                               "stopword_ratio")}
-    )
-    return feat.select("*", score.alias("quality_score"))
-
-
-def doc_quality_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The all-expression arm (the shipped form through r16) — kept as
-    the kernel's parity reference: three-stage projection over one
-    scan, tokenize → features → score-from-feature-COLUMNS (the four
-    shared features evaluate once; no CSE across output columns,
-    1.12 s → 0.85 s at sf0.1, BASELINE.md r8)."""
-    docs = load_table(spark, sf_dir, "documents")
-    # two-step: tokenize once into a column, features read the column
-    # (inline, the split reruns per feature — no CSE across outputs)
-    pre = spread(docs.select("doc_id", "text")).select(
-        "doc_id", "text", ts._lower_tokens("text").alias("_toks")
-    )
-    f = ts.quality_features("text", toks=F.col("_toks"))
-    feat = pre.select(
-        "doc_id",
-        f["n_chars"].alias("n_chars"),
-        f["n_tokens"].alias("n_tokens"),
-        f["alpha_ratio"].alias("alpha_ratio"),
-        f["punct_ratio"].alias("punct_ratio"),
-        f["stopword_ratio"].alias("stopword_ratio"),
-        f["mean_token_len"].alias("mean_token_len"),
-        f["distinct_token_ratio"].alias("distinct_token_ratio"),
-        f["top_token_frac"].alias("top_token_frac"),
     )
     score = ts.quality_score_from(
         {k: F.col(k) for k in ("n_tokens", "mean_token_len", "punct_ratio",

@@ -10,9 +10,10 @@ Gates:
   ("auto") path, on a no-oversized corpus (where the cap subtree is
   ELIDED outright) AND on a genuinely oversized one (where the sidecar
   counts parquet feeds the anti-join detection);
-* the precomputed band-hash column is value-identical to the runtime
-  lsh_bands explode, and a MISMATCHED banding never matches the
-  knob-stamped column name;
+* both branches of the band explode (the precomputed band-hash column
+  and the runtime ``band_hashes`` fallback) and the committed-side
+  ``minhash_banded_frame`` equal a hashlib md5-over-slice reference,
+  and a MISMATCHED banding never matches the knob-stamped column name;
 * zero decision jobs in the miner when band_stats is supplied
   (job-group gate, the test_build_jobs protocol);
 * sidecar persistence: a second minhash_band_stats call reloads from
@@ -93,21 +94,63 @@ def _rowset(df):
     return {tuple(r) for r in df.collect()}
 
 
+def _band_reference(sig_rows, bands, rows):
+    """The banding formula the DuckDB twins replay: md5 hex of the
+    ``|``-joined r-slice of the signature, one row per band."""
+    import hashlib
+
+    return {
+        (
+            doc_id,
+            j,
+            hashlib.md5(
+                "|".join(map(str, sig[j * rows:(j + 1) * rows])).encode()
+            ).hexdigest(),
+            tuple(sig),
+        )
+        for doc_id, sig in sig_rows
+        if sig is not None
+        for j in range(bands)
+    }
+
+
 def test_precomputed_band_hashes_match_runtime(spark, docs):
     sigs = dd.minhash_signatures(
         docs, "doc_id", "text", shingle_n=2, k=8, with_bands=(2, 4)
     )
     assert dd.band_hashes_column(2, 4) in sigs.columns
-    pre = _rowset(dd._minhash_banded(sigs, "doc_id", 2, 4))
-    runtime = _rowset(
-        dd._minhash_banded(sigs.select("doc_id", "sig"), "doc_id", 2, 4)
+    plain = sigs.select("doc_id", "sig")
+    # a shingle-less doc's NULL signature must yield no band row
+    plain = plain.unionByName(
+        spark.createDataFrame([(999, None)], plain.schema)
     )
-    assert pre == runtime
+    frame = dd.minhash_banded_frame(plain, 2, 4, k=8)
+    assert frame.columns == ["doc_id", "band_id", "band_hash", "sig"]
     # a foreign banding must not match the stamped column: k=8 also
-    # factors as 4x2, whose hashes differ from the stored 2x4
+    # factors as 4x2, whose hashes differ from the stored 2x4, so the
+    # band explode falls back to the runtime band_hashes expression
     assert dd.band_hashes_column(4, 2) not in sigs.columns
-    other = dd._minhash_banded(sigs, "doc_id", 4, 2)
-    assert "band_hash" in other.columns  # falls back to runtime lsh_bands
+    branches = {
+        "precomputed": dd._minhash_banded(
+            sigs, "doc_id", 2, 4, keep_sig=True
+        ),
+        "runtime": dd._minhash_banded(plain, "doc_id", 2, 4, keep_sig=True),
+        "frame": frame,
+        "foreign": dd._minhash_banded(sigs, "doc_id", 4, 2, keep_sig=True),
+    }
+    tagged = None
+    for tag, df in branches.items():
+        df = df.select(F.lit(tag).alias("tag"), "*")
+        tagged = df if tagged is None else tagged.unionByName(df)
+    got = {tag: set() for tag in branches}
+    for r in tagged.collect():
+        got[r.tag].add((r.doc_id, r.band_id, r.band_hash, tuple(r.sig)))
+    sig_rows = [tuple(r) for r in plain.collect()]
+    ref = _band_reference(sig_rows, 2, 4)
+    assert ref
+    for tag in ("precomputed", "runtime", "frame"):
+        assert got[tag] == ref, tag
+    assert got["foreign"] == _band_reference(sig_rows, 4, 2)
 
 
 @pytest.mark.parametrize("max_bucket", [50, 10])

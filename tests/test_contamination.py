@@ -115,22 +115,15 @@ def test_duplicate_span_stats_plan_shape(spark):
             df._jdf.queryExecution(), "formatted"
         )
 
-    # the fused default: the span rows come out of a MapInArrow
-    # kernel, no Generate/explode node at all — still two scan
-    # branches, still no Window
+    # the span rows come out of the fused MapInArrow kernel, no
+    # Generate/explode node at all — still two scan branches, still no
+    # Window
     plan = plan_of(duplicate_span_stats(docs, n=20))
     # "Scan parquet" appears in the tree line AND the details header
     # (2 per node)
     assert plan.count("Scan parquet") == 4, plan  # two branches
     assert plan.count(") MapInArrow") == 2, plan  # one kernel per branch
     assert ") Generate" not in plan, plan  # no JVM explode in fused
-    assert "Window" not in plan, plan  # no hot-key single-task ceiling
-
-    # the JVM expression arm keeps the explode shape
-    plan = plan_of(duplicate_span_stats(docs, n=20, span_impl="tokhash"))
-    assert plan.count("Scan parquet") == 4, plan  # two branches
-    # "(n) Generate" only in the details header (1 per node)
-    assert plan.count(") Generate") == 2, plan  # one explode per branch
     assert "Window" not in plan, plan  # no hot-key single-task ceiling
 
 
@@ -256,67 +249,7 @@ def test_duplicate_span_stats_hybrid_bounds_zipf_error(spark):
         duplicate_span_stats(docs, n=20, sample_rate=16, heavy_hitter_support=1.5)
 
 
-def test_span_impl_parity_and_validation(spark):
-    """round-14: the token-hash-slice span kernel (span_impl default)
-    must reproduce the string-concat form exactly on corpora where no
-    64-bit collision occurs (all test corpora): same rows, same
-    counts, in exact AND sampled modes."""
-    import pytest as _pytest
-
-    from mapreduce_implementation_spark.operators.contamination import (
-        duplicate_span_stats,
-    )
-
-    rows = []
-    boiler = " ".join(f"b{i}" for i in range(30))
-    for d in range(40):
-        uniq = " ".join(f"u{d}x{i}" for i in range(25))
-        rows.append((d, boiler + " " + uniq if d % 2 == 0 else uniq))
-    rows.append((100, None))
-    rows.append((101, "short text"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def got(**kw):
-        return sorted(
-            tuple(r)
-            for r in duplicate_span_stats(docs, n=20, **kw).collect()
-        )
-
-    assert got(span_impl="tokhash") == got(span_impl="string")
-    assert got(span_impl="tokhash")  # non-empty
-    # sampled mode: content-hash sampling legitimately picks DIFFERENT
-    # spans per hash function (the estimator is unbiased over the
-    # hash-function choice, not hash-invariant), so the cross-impl
-    # check is determinism + exactness of the sampled classification,
-    # not row equality: each impl repeats itself, and the
-    # heavy-hitter stratum (weight-1 exact) keeps the boilerplate
-    # dup mass identical to the exact mode's for every doc
-    sampled = got(
-        span_impl="tokhash", sample_rate=2, heavy_hitter_support=0.01
-    )
-    assert sampled == got(
-        span_impl="tokhash", sample_rate=2, heavy_hitter_support=0.01
-    )
-    exact_dup = {r[0]: r[2] for r in got(span_impl="tokhash")}
-    for r in sampled:
-        if r[0] in exact_dup and exact_dup[r[0]] > 0:
-            assert r[2] == exact_dup[r[0]], r
-    with _pytest.raises(ValueError, match="span_impl"):
-        duplicate_span_stats(docs, span_impl="vectorized")
-
-
-def test_span_impl_fused_parity(spark):
-    """Round 16 (continued): span_impl='fused' replays the tokhash
-    slice-hash chain in numpy (functions/xxh64np.py) and computes the
-    per-doc distinct with one lexsort — the (id, h) multiset it emits
-    must be BIT-IDENTICAL to the tokhash arm's, so the whole operator
-    output matches exactly in exact AND sampled/heavy-hitter modes
-    (content-hash sampling sees the same hashes, so unlike the
-    string-vs-tokhash pair the sampled rows DO match row-for-row)."""
-    from mapreduce_implementation_spark.operators.contamination import (
-        duplicate_span_stats,
-    )
-
+def _span_corpus(spark):
     rows = []
     boiler = " ".join(f"b{i}" for i in range(30))
     for d in range(40):
@@ -325,17 +258,81 @@ def test_span_impl_fused_parity(spark):
     rows.append((100, None))
     rows.append((101, "short text"))
     rows.append((102, ""))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    # one 20-gram twice in a doc: the per-doc distinct must count it once
+    rep = " ".join(f"r{i}" for i in range(20))
+    rows.append((103, f"{rep} {rep} tail"))
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
-    def got(**kw):
-        return sorted(
-            tuple(r)
-            for r in duplicate_span_stats(docs, n=20, **kw).collect()
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_span_impl_parity_and_validation(spark):
+    """round-14: the operator's span classification must equal the
+    string-concat span hashes' (tests/span_reference.py) fed through
+    the same aggregation tail, on a corpus where no 64-bit collision
+    occurs: same rows, same counts. Sampled mode is deterministic and
+    its heavy-hitter stratum exact."""
+    from span_reference import string_span_hashes
+
+    from mapreduce_implementation_spark.operators.contamination import (
+        _span_stats,
+        duplicate_span_stats,
+    )
+
+    docs = _span_corpus(spark)
+    exact = _sorted_rows(duplicate_span_stats(docs, n=20))
+    assert exact  # non-empty
+    assert exact == _sorted_rows(
+        _span_stats(
+            string_span_hashes(docs, "doc_id", "text", 20), "doc_id",
+            None, None,
         )
-
-    assert got(span_impl="fused") == got(span_impl="tokhash")
-    assert got(span_impl="fused")  # non-empty
-    # same hash family -> sampled mode keeps the SAME spans: full row
-    # equality holds across impls, not just classification exactness
+    )
+    # sampled mode: content-hash sampling legitimately picks DIFFERENT
+    # spans per hash function (the estimator is unbiased over the
+    # hash-function choice, not hash-invariant), so the check is
+    # determinism + exactness of the sampled classification, not row
+    # equality: the operator repeats itself, and the heavy-hitter
+    # stratum (weight-1 exact) keeps the boilerplate dup mass
+    # identical to the exact mode's for every doc
     kw = dict(sample_rate=2, heavy_hitter_support=0.01)
-    assert got(span_impl="fused", **kw) == got(span_impl="tokhash", **kw)
+    sampled = _sorted_rows(duplicate_span_stats(docs, n=20, **kw))
+    assert sampled == _sorted_rows(duplicate_span_stats(docs, n=20, **kw))
+    exact_dup = {r[0]: r[2] for r in exact}
+    for r in sampled:
+        if r[0] in exact_dup and exact_dup[r[0]] > 0:
+            assert r[2] == exact_dup[r[0]], r
+
+
+def test_span_impl_fused_parity(spark):
+    """Round 16 (continued): the fused kernel replays the JVM
+    slice-hash chain in numpy (functions/xxh64np.py) and computes the
+    per-doc distinct with one lexsort — the (id, h) multiset it emits
+    must be BIT-IDENTICAL to the expression reference's
+    (tests/span_reference.py), so the whole operator output equals the
+    reference fed through the same tail in exact AND
+    sampled/heavy-hitter modes (content-hash sampling sees the same
+    hashes, so the sampled rows match row-for-row)."""
+    from span_reference import tokhash_span_hashes
+
+    from mapreduce_implementation_spark.operators.contamination import (
+        _span_hashes,
+        _span_stats,
+        duplicate_span_stats,
+    )
+
+    docs = _span_corpus(spark)
+    ref = tokhash_span_hashes(docs, "doc_id", "text", 20)
+    spans = _sorted_rows(_span_hashes(docs, "doc_id", "text", 20))
+    assert spans  # non-empty
+    assert spans == _sorted_rows(ref)  # a multiset: duplicates kept
+    for kw in ({}, dict(sample_rate=2, heavy_hitter_support=0.01)):
+        got = _sorted_rows(duplicate_span_stats(docs, n=20, **kw))
+        assert got == _sorted_rows(
+            _span_stats(
+                ref, "doc_id", kw.get("sample_rate"),
+                kw.get("heavy_hitter_support"),
+            )
+        ), kw

@@ -150,9 +150,9 @@ def test_connected_components_toy(spark):
 
 
 def test_connected_components_distributed_path(spark):
-    """Force the distributed min-label-propagation path
-    (local_threshold=0) and check it labels components identically to
-    the driver union-find path."""
+    """Force the distributed star-contraction path (local_threshold=0)
+    and check it labels components identically to the driver
+    union-find path."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
         ["doc_a", "doc_b"],
@@ -173,15 +173,14 @@ def test_connected_components_distributed_path(spark):
 
 
 def test_connected_components_raises_when_unconverged(spark):
-    """A chain longer than max_iterations can't converge — the operator
-    must raise rather than return wrong labels (advisor finding)."""
+    """Star contraction of an 8-hop chain needs more than 2 rounds —
+    the operator must raise rather than return wrong labels."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], ["doc_a", "doc_b"]
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dd.connected_components(
-            chain, "doc_a", "doc_b", max_iterations=2, local_threshold=0,
-            distributed_algorithm="label-propagation",
+            chain, "doc_a", "doc_b", max_iterations=2, local_threshold=0
         )
 
 

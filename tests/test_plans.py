@@ -275,6 +275,27 @@ def test_assignment_operators_select_one_kernel(spark):
     assert not hasattr(sim, "_assign_from_list")
 
 
+def test_one_path_per_dedup_operator():
+    """The span-stats, components and banding operators each keep one
+    physical path: no knob selects another, and the second banding
+    expression and the expression form of doc_quality are gone from
+    the package (their references live under tests/)."""
+    import inspect
+
+    from mapreduce_implementation_spark.operators import contamination
+    from mapreduce_implementation_spark.operators import dedup as dd
+    from mapreduce_implementation_spark.plans import textstats_queries
+
+    gone = {
+        contamination.duplicate_span_stats: "span_impl",
+        dd.connected_components: "distributed_algorithm",
+    }
+    for fn, param in gone.items():
+        assert param not in inspect.signature(fn).parameters, fn.__name__
+    assert not hasattr(dd, "lsh_bands")
+    assert not hasattr(textstats_queries, "doc_quality_expr")
+
+
 def test_bucketed_join_avoids_shuffle(spark, oracle_sf_dir):
     """Co-located join via bucketing: both tables bucketed+sorted on the
     join key → SortMergeJoin with NO exchange on either side. At 100 TB

@@ -3,7 +3,8 @@
 doc_quality's integer feature inputs moved from the interpreted-HOF
 expression chain to ``token_stats_arrow`` (one vectorized mapInArrow
 pass — 12.3× at 1M docs, OPTIMIZATION_r17.md). These tests pin the
-kernel EXACTLY equal to the expr arm (``doc_quality_expr``) on every
+kernel EXACTLY equal to the expression reference
+(``tests/textstats_reference.py::doc_quality_expr``) on every
 edge the chain has semantics for:
 
 * NULL text (every stat NULL), empty text and whitespace-only text
@@ -25,10 +26,9 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from textstats_reference import doc_quality_expr
+
 from mapreduce_implementation_spark.functions import textstats as ts
-from mapreduce_implementation_spark.plans.textstats_queries import (
-    doc_quality_expr,
-)
 from mapreduce_implementation_spark.plans import all_queries
 
 ADVERSARIAL = [
