@@ -37,12 +37,6 @@ def norm(a: Column | str) -> Column:
     )
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; null-safe for zero vectors (returns NULL)."""
-    denom = norm(a) * norm(b)
-    return F.when(denom != 0, dot(a, b) / denom)
-
-
 def normalize(a: Column | str) -> Column:
     """Unit-normalize an array column (NULL for zero vectors).
 

@@ -1750,9 +1750,15 @@ def connected_components_star(
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # nodes come from the UNFILTERED edge list: a node whose only edge is
     # a self-loop must still appear (own-label singleton), matching the
-    # driver union-find path.
+    # driver union-find path. Checkpointed here, like the edge rounds:
+    # the returned frame must not reach back into ``edges``, which the
+    # caller may unpersist (connected_components does) — a lazy node
+    # set re-ran the whole edge pipeline on every output action.
     nodes = (
-        raw.select("u").union(raw.select(F.col("v").alias("u"))).distinct()
+        raw.select("u")
+        .union(raw.select(F.col("v").alias("u")))
+        .distinct()
+        .localCheckpoint()
     )
     e = raw.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
     prev_sig = None

@@ -27,13 +27,45 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mapreduce_implementation_spark.functions.vectors import cosine
+from mapreduce_implementation_spark.functions.vectors import dot, norm
 
 COS_Q = "decimal(10,4)"
 
 
-def _score(q_emb: Column, e_emb: Column) -> Column:
-    return cosine(q_emb, e_emb).cast(COS_Q)
+def _staged_score(q_emb: str, e_emb: str) -> Column:
+    """Quantized cosine of one (query, vector) pair from L2 norms
+    STAGED as columns once per row BEFORE the join: ``_qn`` on the
+    query side, ``_vn`` on the scanned side (``norm`` of the same
+    array). Each pair then runs one interpreted dot fold instead of
+    the dot plus four norm folds the inline ``when(denom != 0,
+    dot/denom)`` form costs (Catalyst evaluates ``denom`` twice and
+    has no CSE across the HOF folds). The values are bit-identical to
+    that form: the same folds, and ``_qn * _vn`` is the same IEEE
+    product. NULL semantics too: a NULL, zero or ragged side gives a
+    NULL or zero norm or a NULL dot, and the pair scores NULL."""
+    denom = F.col("_qn") * F.col("_vn")
+    return F.when(denom != 0, dot(F.col(q_emb), F.col(e_emb)) / denom).cast(
+        COS_Q
+    )
+
+
+def _local_frame(spark, ddl: str, columns: list[list]) -> DataFrame:
+    """Driver-built rows as a ``LocalRelation``: ``createDataFrame``
+    over an Arrow table. The row-list form plans as a ``LogicalRDD``,
+    so each collect or broadcast of it is a Spark job (~120–200 ms on
+    a 4-core host); a ``LocalRelation`` collects on the driver with no
+    job. ``columns`` holds one value list per ``ddl`` field, in order;
+    the schema, nullability included, is exactly ``ddl``'s."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, schema)],
+        schema=schema,
+    )
+    return spark.createDataFrame(table, ddl)
 
 
 def brute_force_topk(
@@ -76,17 +108,21 @@ def brute_force_topk(
         )
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias(query_id_col), F.col(emb_col).alias("_q_emb")
+            F.col(id_col).alias(query_id_col),
+            F.col(emb_col).alias("_q_emb"),
+            norm(F.col(emb_col)).alias("_qn"),
         )
     )
     scored = (
-        vectors.select(F.col(id_col), F.col(emb_col))
+        vectors.select(
+            F.col(id_col), F.col(emb_col), norm(F.col(emb_col)).alias("_vn")
+        )
         .crossJoin(q)
         .where(F.col(id_col) != F.col(query_id_col))
         .select(
             F.col(query_id_col),
             F.col(id_col),
-            _score(F.col("_q_emb"), F.col(emb_col)).alias("cos_sim"),
+            _staged_score("_q_emb", emb_col).alias("cos_sim"),
         )
     )
     return _rank_topk(scored, query_id_col, id_col, k)
@@ -110,10 +146,14 @@ def _brute_force_topk_arrow(
 
     ship_module_by_value()
 
+    # one job: a limit over the query scan collected as Arrow (a
+    # Row collect of the limit runs incremental take jobs); the cap+1
+    # rows bound what reaches the driver before the guard raises
     qrows = (
         queries.select(F.col(id_col), F.col(emb_col))
         .limit(max_queries + 1)
-        .collect()
+        .toArrow()
+        .to_pylist()
     )
     if len(qrows) > max_queries:
         raise ValueError(
@@ -448,7 +488,10 @@ def train_centroids(
     (the same design as MLlib's KMeans), so each iteration is one
     bounded Spark job and the lineage never grows. Returns
     DataFrame[centroid_id int, centroid_emb array<long>] in micro-unit
-    scale (cosine downstream is scale-invariant).
+    scale (cosine downstream is scale-invariant), as a driver-local
+    relation (``LocalRelation``, built from Arrow): every consumer that
+    collects it (assign_inverted_lists, each append_to_ivf_index and
+    ivf_topk_from_index call) reads it on the driver with no Spark job.
 
     ``sample_n`` trains Lloyd on a deterministic bounded sample of
     ~``sample_n`` rows, selected by a HASH THRESHOLD
@@ -564,8 +607,10 @@ def train_centroids(
                 )
             )
         centroids = new_centroids
-    return spark.createDataFrame(
-        centroids, "centroid_id int, centroid_emb array<long>"
+    return _local_frame(
+        spark,
+        "centroid_id int, centroid_emb array<long>",
+        [[cid for cid, _ in centroids], [emb for _, emb in centroids]],
     )
 
 
@@ -638,9 +683,10 @@ def train_two_level_centroids(
             fine_rows.append(
                 (cid, cid * k_fine + j, [float(x) for x in m[emb_col]])
             )
-    fine = spark.createDataFrame(
-        fine_rows,
+    fine = _local_frame(
+        spark,
         "coarse_id int, centroid_id int, centroid_emb array<double>",
+        [[row[i] for row in fine_rows] for i in range(3)],
     )
     return coarse, fine
 
@@ -679,8 +725,6 @@ def assign_two_level(
     fine centroid id — one row per input row (ids are assumed unique,
     as everywhere in the similarity stack)."""
     from pyspark.sql import types as T
-
-    from mapreduce_implementation_spark.functions.vectors import norm
 
     cents = sorted(
         (
@@ -855,8 +899,6 @@ def assign_inverted_lists(
     tests/similarity_reference.py."""
     from pyspark.sql import types as T
 
-    from mapreduce_implementation_spark.functions.vectors import norm
-
     cents = [
         (int(r.centroid_id), [float(x) for x in r.centroid_emb])
         for r in sorted(
@@ -986,8 +1028,6 @@ def _train_sums_arrow(df: DataFrame, cents, emb_col: str = "ev") -> DataFrame:
     oracle-replayed Lloyd rows)."""
     from pyspark.sql import types as T
 
-    from mapreduce_implementation_spark.functions.vectors import norm
-
     ship_module_by_value()
 
     cent_ids, cent_vals, cent_norms = _centroid_table(cents)
@@ -1099,12 +1139,13 @@ def ivf_topk(
     prunes partitions at the scan."""
     vb = assign_inverted_lists(
         vectors, centroids, 1, id_col, emb_col, keep_cols=(emb_col,)
-    )
+    ).withColumn("_vn", norm(F.col(emb_col)))
     qb = assign_inverted_lists(
         queries, centroids, nprobe, id_col, emb_col, keep_cols=(emb_col,)
     ).select(
         F.col(id_col).alias(query_id_col),
         F.col(emb_col).alias("_q_emb"),
+        norm(F.col(emb_col)).alias("_qn"),
         F.col("centroid_id"),
     )
     scored = (
@@ -1113,7 +1154,7 @@ def ivf_topk(
         .select(
             F.col(query_id_col),
             F.col(id_col),
-            _score(F.col("_q_emb"), F.col(emb_col)).alias("cos_sim"),
+            _staged_score("_q_emb", emb_col).alias("cos_sim"),
         )
     )
     return _rank_topk(scored, query_id_col, id_col, k)
@@ -1139,7 +1180,7 @@ def quantize_sq8(
     (pytest-bounded). Edge semantics: NULL embedding → NULL codes;
     empty array → empty codes (NULL scale); an all-zeros vector →
     all-zero codes (scale 0), whose cosine is NULL downstream — the
-    same null-safe zero-vector contract as ``functions.vectors.cosine``.
+    same null-safe zero-vector contract as ``_staged_score``.
 
     Why it matters at 100 TB: the probe's cost is dominated by
     SCANNING the inverted lists it prunes down to, and SQ8 cuts those
@@ -1220,30 +1261,77 @@ def read_index_calibration(index_dir: str) -> dict | None:
         return json.loads(f.read().decode())
 
 
+SPARK_ROW_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_footer(spark, path: str):
+    """Footer metadata (the JVM ``FileMetaData``) of the first
+    committed data file under ``path``, or None when the path does not
+    exist or holds no data file. Hidden entries (``_``/``.`` prefixes:
+    ``_SUCCESS``, the calibration stamp, ``.spark-staging-*`` dirs)
+    are skipped, as Spark's file index skips them. The listing and the
+    footer read run on the driver through the session's Hadoop
+    filesystem, so every scheme Spark reads works, and no Spark job
+    runs: ``spark.read.parquet`` infers the schema in a one-task job."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    if not fs.exists(root):
+        return None
+    root = fs.makeQualified(root)
+    depth = root.depth()
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        leaf = files.next().getPath()
+        names, node = [], leaf
+        while node.depth() > depth:
+            names.append(node.getName())
+            node = node.getParent()
+        if not any(n.startswith(("_", ".")) for n in names):
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader
+            return reader.readFooter(conf, leaf).getFileMetaData()
+    return None
+
+
+def _read_index(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the data schema taken from a
+    committed file's footer (Spark stores its row schema there) instead
+    of inferred, which saves the inference job. Partition columns are
+    still discovered from the directory names, and the schema equals
+    the inferred one. A path with no data file, or files without a
+    Spark row schema, reads through plain inference."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    meta = _first_data_footer(spark, path)
+    row_schema = (
+        None
+        if meta is None
+        else meta.getKeyValueMetaData().get(SPARK_ROW_SCHEMA_KEY)
+    )
+    if row_schema is None:
+        return spark.read.parquet(path)
+    schema = StructType.fromJson(json.loads(row_schema))
+    return spark.read.schema(schema).parquet(path)
+
+
 def existing_index_layout(spark, path: str) -> str | None:
     """Sniff a materialized index's storage layout: ``"int8"`` (SQ8
     codes), ``"float"`` (raw embeddings), or None when nothing is
-    committed yet. Benign failures (ADVICE r13 narrowed them
-    deliberately — anything else must propagate or it would silently
-    disarm the mixed-layout guard): PATH_NOT_FOUND (no directory),
-    and UNABLE_TO_INFER_SCHEMA (directory exists but holds no data
-    files — the state ``stamp_index_calibration`` leaves before the
-    first batch lands, since the stamp is a hidden non-parquet
-    file)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        cols = spark.read.parquet(path).columns
-    except AnalysisException as e:
-        cond = (
-            getattr(e, "getCondition", None)
-            or getattr(e, "getErrorClass", lambda: None)
-        )()
-        benign = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        if cond not in benign and not any(b in str(e) for b in benign):
-            raise
+    committed yet: no directory, or a directory holding no data file
+    (the state ``stamp_index_calibration`` leaves before the first
+    batch lands, since the stamp is a hidden non-parquet file). The
+    column names come from one data file's footer, read on the driver
+    (_first_data_footer): no Spark job. Anything else that fails (an
+    unreadable footer) propagates, or it would silently disarm the
+    mixed-layout guard."""
+    meta = _first_data_footer(spark, path)
+    if meta is None:
         return None
-    return "int8" if SQ8_CODE_COL in cols else "float"
+    names = [f.getName() for f in meta.getSchema().getFields()]
+    return "int8" if SQ8_CODE_COL in names else "float"
 
 
 def materialize_ivf_index(
@@ -1424,7 +1512,20 @@ def ivf_topk_from_index(
     report. ``nprobe=None`` probes at the calibrated depth; an
     explicit nprobe SHALLOWER than calibrated raises (it would probe
     below the measured recall target — the knob the curve exists to
-    set), while a deeper one is allowed (recall only rises)."""
+    set), while a deeper one is allowed (recall only rises).
+
+    Cost at the warm state (index committed, ``centroids`` from
+    train_centroids): the capped query set is collected as Arrow in
+    ONE job (a Row collect of a limit runs incremental take jobs); the
+    centroid collect runs no job (a driver-local relation); the query
+    rows are ranked on the driver (r17) and broadcast from a
+    driver-local frame that also carries each query's norm. The index
+    side stages its norm once per scanned row before the join, so each
+    (query, vector) pair costs one dot fold. The index is read with
+    the schema from a committed file's footer, read on the driver
+    (_read_index), so no schema-inference job runs, and its scan is
+    coalesced to one task per core. The rest is the action's
+    broadcast, shuffle and result jobs: 4 jobs for an 8-query probe."""
     if calibration is not None:
         cal = _ann_calibration_section(calibration)
         if nprobe is None:
@@ -1444,21 +1545,19 @@ def ivf_topk_from_index(
         )
     # The guard rides the collect itself (no extra job): cap+1 rows is
     # the most that ever reaches the driver, corpus-sized input or not.
-    # r17 (verdict item 4): the queries were already driver-bound by
-    # contract, so the nearest-centroid ranking runs DRIVER-SIDE via
-    # the shared _np_batch_order instead of a Python-worker
-    # mapInPandas job — the collect becomes a plain JVM scan (no
-    # Python worker round, no Arrow transfer) and the probe drops one
-    # job. Parity is structural: the ranking core is byte-identical
-    # (_np_batch_order incl. the np_quantize_q4 boundary replay), and
-    # the one term that moves — the ``_vn`` norm Spark computed in the
-    # assignment projection — is replayed by _norm_fold_py with the
-    # same IEEE left fold (pinned bit-exact in tests/test_similarity.py
-    # against the Spark-assignment arm).
+    # One job: the limit is collected as Arrow (a Row collect of it runs
+    # incremental take jobs). The nearest-centroid ranking then runs
+    # DRIVER-SIDE via the shared _np_batch_order (r17); parity is
+    # structural: the ranking core is byte-identical (incl. the
+    # np_quantize_q4 boundary replay), and the one term that moves, the
+    # ``_vn`` norm Spark computes in the assignment projection, is
+    # replayed by _norm_fold_py with the same IEEE left fold (pinned
+    # bit-exact in tests/test_similarity.py).
     qrows = (
         queries.select(F.col(id_col), F.col(emb_col))
         .limit(max_queries + 1)
-        .collect()
+        .toArrow()
+        .to_pylist()
     )
     if len(qrows) > max_queries:
         raise ValueError(
@@ -1477,13 +1576,25 @@ def ivf_topk_from_index(
     ]
     assigned = _assign_rows_local(qrows, cents, nprobe, id_col, emb_col)
     probe_ids = sorted({cid for _, _, cid in assigned})
+    # the query norm rides the broadcast rows: the Spark fold's value
+    # (_norm_fold_py), NULL for a NULL embedding as the fold gives
     qb = F.broadcast(
-        spark.createDataFrame(
-            assigned,
-            f"{query_id_col} long, _q_emb array<double>, centroid_id int",
+        _local_frame(
+            spark,
+            f"{query_id_col} long, _q_emb array<double>, _qn double, "
+            "centroid_id int",
+            [
+                [qid for qid, _, _ in assigned],
+                [emb for _, emb, _ in assigned],
+                [
+                    None if emb is None else _norm_fold_py(emb)
+                    for _, emb, _ in assigned
+                ],
+                [cid for _, _, cid in assigned],
+            ],
         )
     )
-    index = spark.read.parquet(index_path)
+    index = _read_index(spark, index_path)
     # layout sniff: an SQ8 index (materialize_ivf_index quantize="int8")
     # carries codes instead of floats — cosine is scale-invariant, so
     # the codes score DIRECTLY (no dequantization column, no join to a
@@ -1492,12 +1603,23 @@ def ivf_topk_from_index(
     vec_col = SQ8_CODE_COL if SQ8_CODE_COL in index.columns else emb_col
     scored = (
         index.where(F.col("centroid_id").isin(probe_ids))
+        .select(
+            "centroid_id",
+            id_col,
+            vec_col,
+            norm(F.col(vec_col)).alias("_vn"),
+        )
+        # the probed lists are many small files (one per list per
+        # batch), which split into a task per file pair; one task per
+        # core reads them at the same parallelism without paying a
+        # task launch per pair (a no-op when there are fewer splits)
+        .coalesce(spark.sparkContext.defaultParallelism)
         .join(qb, "centroid_id")
         .where(F.col(id_col) != F.col(query_id_col))
         .select(
             F.col(query_id_col),
             F.col(id_col),
-            _score(F.col("_q_emb"), F.col(vec_col)).alias("cos_sim"),
+            _staged_score("_q_emb", vec_col).alias("cos_sim"),
         )
     )
     return _rank_topk(scored, query_id_col, id_col, k)
@@ -1580,8 +1702,6 @@ def _query_probe_buckets(
 
     Per-plane dots are STAGED as columns (Catalyst has no CSE across
     the bit/flip/order expressions that reuse them)."""
-    from mapreduce_implementation_spark.functions.vectors import dot
-
     plane_rows = sorted(
         planes.select("plane_id", "plane_emb").collect(), key=lambda r: r.plane_id
     )
@@ -1655,17 +1775,19 @@ def lsh_topk(
     The candidate join shuffles on the bucket string only; per-bucket
     skew is bounded by 2^|planes| tuning at scale.
     """
-    vb = _with_buckets(vectors, planes, id_col, emb_col, keep_emb=True)
+    vb = _with_buckets(
+        vectors, planes, id_col, emb_col, keep_emb=True
+    ).withColumn("_vn", norm(F.col(emb_col)))
     qb = _query_probe_buckets(
         queries, planes, id_col, emb_col, query_id_col, probes
-    )
+    ).withColumn("_qn", norm(F.col("_q_emb")))
     scored = (
         vb.join(F.broadcast(qb), "bucket")
         .where(F.col(id_col) != F.col(query_id_col))
         .select(
             F.col(query_id_col),
             F.col(id_col),
-            _score(F.col("_q_emb"), F.col(emb_col)).alias("cos_sim"),
+            _staged_score("_q_emb", emb_col).alias("cos_sim"),
         )
     )
     return _rank_topk(scored, query_id_col, id_col, k)

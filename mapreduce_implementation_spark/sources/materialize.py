@@ -150,19 +150,21 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
 def _plan_has_generator(df: DataFrame) -> bool:
     """True when the optimized logical plan contains a Generate node
     (explode/posexplode/inline …) — the row-multiplying shapes whose
-    output bytes the scan-size estimate cannot bound. Driver-side plan
-    walk only (the spread() probe pattern); unknown plan surfaces
-    (Spark Connect — no _jdf) conservatively report True so the caller
-    falls back to runtime-statistics sizing."""
+    output bytes the scan-size estimate cannot bound. The walk covers
+    each node's subquery plans (a scalar subquery stays an expression
+    in the optimized plan, not a child) as well as its children.
+    Driver-side plan walk only (the spread() probe pattern); unknown
+    plan surfaces (Spark Connect — no _jdf) conservatively report True
+    so the caller falls back to runtime-statistics sizing."""
     try:
         stack = [df._jdf.queryExecution().optimizedPlan()]
         while stack:
             node = stack.pop()
             if node.getClass().getSimpleName().startswith("Generate"):
                 return True
-            children = node.children()
-            for i in range(children.size()):
-                stack.append(children.apply(i))
+            for nested in (node.children(), node.subqueries()):
+                for i in range(nested.size()):
+                    stack.append(nested.apply(i))
         return False
     except Exception:
         return True

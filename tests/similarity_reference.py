@@ -7,6 +7,11 @@ expressions, in the shape the DuckDB twins in
 ``plans/similarity_queries.py`` replay: score every (vector, centroid)
 pair, quantize to DECIMAL(10,4), rank ``score DESC NULLS LAST,
 centroid_id ASC``. Tests compare the kernels against them row for row.
+
+``probe_reference`` is ``ivf_topk_from_index`` in the same style: every
+(query, indexed vector) pair scored by the inline ``cosine`` below,
+which folds both norms inside the pair expression, against the
+operator's norms staged once per row.
 """
 
 from __future__ import annotations
@@ -15,9 +20,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mapreduce_implementation_spark.functions.vectors import cosine, dot
+from mapreduce_implementation_spark.functions.vectors import dot, norm
 
 COS_Q = "decimal(10,4)"
+
+
+def cosine(a, b):
+    """Cosine similarity; NULL for a zero, NULL or ragged side."""
+    denom = norm(a) * norm(b)
+    return F.when(denom != 0, dot(a, b) / denom)
 
 
 def _top_by_score(scored: DataFrame, id_col: str, cid_col: str, nprobe: int):
@@ -107,3 +118,48 @@ def buckets_reference(
     ]
     cols = [F.col(id_col)] + ([F.col(emb_col)] if keep_emb else [])
     return df.select(*cols, F.concat(*bits).alias("bucket"))
+
+
+def probe_reference(
+    spark,
+    index_path: str,
+    queries: DataFrame,
+    centroids: DataFrame,
+    k: int,
+    nprobe: int,
+    id_col: str = "vec_id",
+    emb_col: str = "embedding",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """IVF top-k over a materialized index: each query's ``nprobe``
+    lists by ``assign_reference``, every (query, indexed vector) pair
+    in them scored by the inline cosine (SQ8 codes directly, as the
+    operator does), then rank ``score DESC NULLS LAST, vec_id ASC``
+    and keep ``k`` — DataFrame[query_id, vec_id, cos_sim double,
+    rank long]."""
+    q = assign_reference(
+        queries, centroids, nprobe, id_col, emb_col, keep_cols=(emb_col,)
+    ).select(
+        F.col(id_col).cast("long").alias(query_id_col),
+        F.col(emb_col).cast("array<double>").alias("_q_emb"),
+        F.col("centroid_id"),
+    )
+    index = spark.read.parquet(index_path)
+    vec_col = "emb_q" if "emb_q" in index.columns else emb_col
+    scored = (
+        index.join(q, "centroid_id")
+        .where(F.col(id_col) != F.col(query_id_col))
+        .select(
+            F.col(query_id_col),
+            F.col(id_col),
+            cosine(F.col("_q_emb"), F.col(vec_col)).cast(COS_Q).alias("cos_sim"),
+        )
+    )
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("cos_sim").desc_nulls_last(), F.col(id_col)
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .withColumn("cos_sim", F.col("cos_sim").cast("double"))
+    )

@@ -418,3 +418,76 @@ class TestConnectedComponentsJobs:
         )
         assert 0 < n <= 3, f"local connected_components launched {n} jobs"
         assert out.count() == 203
+
+
+class TestIvfServeJobs:
+    """The IVF serve path runs from driver-local frames: train_centroids
+    returns a LocalRelation, so collecting it runs no job; the index
+    layout and schema come from a footer read on the driver, so a warm
+    append runs only its write, and a warm probe one query collect and
+    its action's jobs."""
+
+    DDL = "centroid_id int, centroid_emb array<long>"
+
+    @pytest.fixture(scope="class")
+    def served(self, spark, tmp_path_factory):
+        import random
+
+        from mapreduce_implementation_spark.operators import (
+            similarity as sim,
+        )
+
+        rng = random.Random(23)
+
+        def batch(n, offset):
+            return spark.createDataFrame(
+                [
+                    (offset + i, [rng.uniform(-1, 1) for _ in range(8)])
+                    for i in range(n)
+                ],
+                "vec_id long, embedding array<float>",
+            )
+
+        path = str(tmp_path_factory.mktemp("ivf_serve") / "index")
+        cents = sim.train_centroids(batch(400, 0), k=4, iters=1)
+        sim.append_to_ivf_index(batch(400, 0), cents, path, 0)
+        return sim, cents, path, batch
+
+    def test_train_centroids_output_collects_without_a_job(
+        self, spark, served
+    ):
+        from pyspark.sql.types import StructType
+
+        _, cents, _, _ = served
+        rows, n = _count_build_jobs(spark, cents.collect)
+        assert n == 0, f"collecting the centroids ran {n} jobs"
+        assert len(rows) == 4
+        assert cents.schema == StructType.fromDDL(self.DDL)
+
+    def test_warm_append_runs_only_its_write(self, spark, served):
+        sim, cents, path, batch = served
+        fresh = batch(100, 10_000)
+        _, n = _count_build_jobs(
+            spark, lambda: sim.append_to_ivf_index(fresh, cents, path, 1)
+        )
+        assert n == 1, f"warm append ran {n} jobs"
+
+    def test_warm_probe_at_most_four_jobs(self, spark, served):
+        """Query collect, and the action's broadcast, shuffle and result
+        jobs. The broadcast side is the driver-built query frame,
+        scanned locally (a row-list frame costs the same job count, so
+        the plan is checked too)."""
+        sim, cents, path, batch = served
+        queries = batch(8, 20_000)
+
+        def run():
+            probe = sim.ivf_topk_from_index(
+                spark, path, queries, cents, k=5, nprobe=2
+            )
+            return probe, probe.collect()
+
+        (probe, rows), n = _count_build_jobs(spark, run)
+        assert 0 < n <= 4, f"warm probe ran {n} jobs"
+        assert {r.query_id for r in rows} == set(range(20_000, 20_008))
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan

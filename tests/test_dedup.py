@@ -289,6 +289,30 @@ def test_connected_components_paths_match_reference(spark):
         assert {r.doc_id: r.cluster_id for r in star} == expected
 
 
+def test_connected_components_star_output_does_not_rerun_edges(spark):
+    """The star path's result must not reach back into the edge
+    pipeline, which the build has already unpersisted: a counting UDF
+    on a 50-edge input sees every edge during the build and none during
+    the caller's action (a lazy node set re-ran all 50)."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        seen.add(1)
+        return x
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 100, 2)], "doc_a long, doc_b long"
+    ).select(F.udf(tick, "long")("doc_a").alias("doc_a"), "doc_b")
+    out = dd.connected_components(edges, local_threshold=0)
+    built = seen.value
+    rows = out.collect()
+    assert built >= 50
+    assert seen.value == built, f"action re-ran {seen.value - built} edges"
+    assert {(r.doc_id, r.cluster_id) for r in rows} == {
+        (v, i) for i in range(0, 100, 2) for v in (i, i + 1)
+    }
+
+
 def test_connected_components_output_contract(spark):
     """Empty input → 0 rows of ``doc_id bigint, cluster_id bigint``;
     int/short ids come back as long; a self-loop-only node stays its

@@ -8,7 +8,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, IntegerType, StructField, StructType
-from similarity_reference import assign_reference, buckets_reference
+from similarity_reference import (
+    assign_reference,
+    buckets_reference,
+    probe_reference,
+)
 
 from mapreduce_implementation_spark.operators import similarity as sim
 
@@ -872,6 +876,85 @@ def test_brute_force_topk_arrow_expr_parity(spark, adversarial_vectors):
         sim.brute_force_topk(
             adversarial_vectors, adversarial_vectors, k=3, max_queries=10
         )
+
+
+@pytest.mark.parametrize("quantize", [None, "int8"])
+def test_probe_rows_match_inline_cosine_reference(
+    spark, adversarial_vectors, adversarial_centroids, tmp_path, quantize
+):
+    """ivf_topk_from_index scores each pair from norms staged once per
+    row; its rows must equal the inline-cosine reference (both norms
+    folded inside every pair) row for row: ranks, quantized scores,
+    vec_id tiebreaks and NULL-score fillers, with NULL, all-zero and
+    ragged rows on the query side and the index side, for a float and
+    an SQ8 index. k covers every probed candidate, so the index's
+    NULL-score rows are in the output too."""
+    path = str(tmp_path / f"ivf_{quantize}")
+    sim.materialize_ivf_index(
+        adversarial_vectors, adversarial_centroids, path, quantize=quantize
+    )
+    queries = adversarial_vectors.where(
+        F.col("vec_id").isin(0, 7, 300, 301, 302)
+    )
+
+    def rows(df):
+        return sorted(
+            (r.query_id, r.vec_id, r.rank, r.cos_sim) for r in df.collect()
+        )
+
+    got = sim.ivf_topk_from_index(
+        spark, path, queries, adversarial_centroids, k=400, nprobe=2
+    )
+    assert got.schema == StructType.fromDDL(
+        "query_id long, vec_id int, cos_sim double, rank long not null"
+    )
+    got = rows(got)
+    assert got == rows(
+        probe_reference(
+            spark, path, queries, adversarial_centroids, k=400, nprobe=2
+        )
+    )
+    assert {t[0] for t in got} == {0, 7, 300, 301, 302}
+    assert {300, 301, 302} <= {t[1] for t in got}
+
+
+def test_index_schema_from_footer_matches_inference(
+    spark, adversarial_vectors, adversarial_centroids, tmp_path
+):
+    """The probe and the append's layout guard take the index schema
+    from a committed file's footer, read on the driver, instead of a
+    Spark inference job. The read schema must equal the inferred one
+    for each layout (one-level float, one-level SQ8, appended
+    two-level), and the sniff must see no layout in a missing
+    directory, a stamp-only directory or one whose only data file sits
+    in a hidden staging directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    flat, sq8, appended = (
+        str(tmp_path / n) for n in ("flat", "sq8", "appended")
+    )
+    sim.materialize_ivf_index(adversarial_vectors, adversarial_centroids, flat)
+    sim.materialize_ivf_index(
+        adversarial_vectors, adversarial_centroids, sq8, quantize="int8"
+    )
+    sim.append_to_ivf_index(
+        adversarial_vectors, adversarial_centroids, appended, 0
+    )
+    for path, layout in ((flat, "float"), (sq8, "int8"), (appended, "float")):
+        assert sim._read_index(spark, path).schema == (
+            spark.read.parquet(path).schema
+        ), path
+        assert sim.existing_index_layout(spark, path) == layout
+
+    stamped = tmp_path / "stamped"
+    stamped.mkdir()
+    (stamped / sim.ANN_CALIBRATION_STAMP).write_text("{}")
+    staging = tmp_path / "staging" / ".spark-staging-1" / "centroid_id=0"
+    staging.mkdir(parents=True)
+    pq.write_table(pa.table({"emb_q": [[1]]}), str(staging / "part-0.parquet"))
+    for path in ("missing", "stamped", "staging"):
+        assert sim.existing_index_layout(spark, str(tmp_path / path)) is None
 
 
 class TestSQ8Index:

@@ -470,6 +470,35 @@ def test_ensure_table_write_sizing_expanding(spark, tmp_path):
     assert got.count() == 200 * 50
 
 
+def test_ensure_table_write_sizing_generator_in_subquery(spark, tmp_path):
+    """A Generate that sits only inside a scalar subquery is not a plan
+    child (the optimized plan keeps the subquery as an expression); the
+    generator probe must still see it, so the write takes the
+    runtime-sizing (rebalance) path."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_implementation_spark.sources.materialize import (
+        _plan_has_generator,
+        _sized_for_write,
+    )
+
+    src = str(tmp_path / "subq_src")
+    spark.range(0, 200).selectExpr("id", "id * 2 AS v").write.parquet(src)
+    base = spark.read.parquet(src)
+    cap = (
+        base.select(
+            F.explode(F.sequence(F.lit(0), F.col("id").cast("int"))).alias("p")
+        )
+        .agg(F.max("p"))
+        .scalar()
+    )
+    df = base.where(F.col("v") <= cap)
+    assert _plan_has_generator(df)
+    sized = _sized_for_write(df)
+    assert "rebalance" in sized._jdf.queryExecution().logical().toString().lower()
+    assert df.count() == 100
+
+
 def test_ensure_table_write_sizing(spark, tmp_path):
     """r16: unpartitioned ensure_table writes right-size their file
     count from the build frame's scan bytes (guide §6) — a spread()
