@@ -54,8 +54,12 @@ def _local_frame(spark, ddl: str, columns: list[list]) -> DataFrame:
     over an Arrow table. The row-list form plans as a ``LogicalRDD``,
     so each collect or broadcast of it is a Spark job (~120–200 ms on
     a 4-core host); a ``LocalRelation`` collects on the driver with no
-    job. ``columns`` holds one value list per ``ddl`` field, in order;
-    the schema, nullability included, is exactly ``ddl``'s."""
+    job. Spark builds the ``LocalRelation`` only while the Arrow payload
+    stays below ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MiB by default); above it the frame is a ``LogicalRDD`` again
+    and its collects run jobs. ``columns`` holds one value list per
+    ``ddl`` field, in order; the schema, nullability included, is
+    exactly ``ddl``'s."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
@@ -489,9 +493,13 @@ def train_centroids(
     bounded Spark job and the lineage never grows. Returns
     DataFrame[centroid_id int, centroid_emb array<long>] in micro-unit
     scale (cosine downstream is scale-invariant), as a driver-local
-    relation (``LocalRelation``, built from Arrow): every consumer that
-    collects it (assign_inverted_lists, each append_to_ivf_index and
-    ivf_topk_from_index call) reads it on the driver with no Spark job.
+    relation (``LocalRelation``, built from Arrow; _local_frame): every
+    consumer that collects it (assign_inverted_lists, each
+    append_to_ivf_index and ivf_topk_from_index call) reads it on the
+    driver with no Spark job, while its k×d longs stay below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
+    default, ~6M values); a larger set is an RDD-backed frame whose
+    collects run jobs.
 
     ``sample_n`` trains Lloyd on a deterministic bounded sample of
     ~``sample_n`` rows, selected by a HASH THRESHOLD
@@ -1261,77 +1269,30 @@ def read_index_calibration(index_dir: str) -> dict | None:
         return json.loads(f.read().decode())
 
 
-SPARK_ROW_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
-
-
-def _first_data_footer(spark, path: str):
-    """Footer metadata (the JVM ``FileMetaData``) of the first
-    committed data file under ``path``, or None when the path does not
-    exist or holds no data file. Hidden entries (``_``/``.`` prefixes:
-    ``_SUCCESS``, the calibration stamp, ``.spark-staging-*`` dirs)
-    are skipped, as Spark's file index skips them. The listing and the
-    footer read run on the driver through the session's Hadoop
-    filesystem, so every scheme Spark reads works, and no Spark job
-    runs: ``spark.read.parquet`` infers the schema in a one-task job."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):
-        return None
-    root = fs.makeQualified(root)
-    depth = root.depth()
-    files = fs.listFiles(root, True)
-    while files.hasNext():
-        leaf = files.next().getPath()
-        names, node = [], leaf
-        while node.depth() > depth:
-            names.append(node.getName())
-            node = node.getParent()
-        if not any(n.startswith(("_", ".")) for n in names):
-            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader
-            return reader.readFooter(conf, leaf).getFileMetaData()
-    return None
-
-
-def _read_index(spark, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the data schema taken from a
-    committed file's footer (Spark stores its row schema there) instead
-    of inferred, which saves the inference job. Partition columns are
-    still discovered from the directory names, and the schema equals
-    the inferred one. A path with no data file, or files without a
-    Spark row schema, reads through plain inference."""
-    import json
-
-    from pyspark.sql.types import StructType
-
-    meta = _first_data_footer(spark, path)
-    row_schema = (
-        None
-        if meta is None
-        else meta.getKeyValueMetaData().get(SPARK_ROW_SCHEMA_KEY)
-    )
-    if row_schema is None:
-        return spark.read.parquet(path)
-    schema = StructType.fromJson(json.loads(row_schema))
-    return spark.read.schema(schema).parquet(path)
-
-
 def existing_index_layout(spark, path: str) -> str | None:
     """Sniff a materialized index's storage layout: ``"int8"`` (SQ8
     codes), ``"float"`` (raw embeddings), or None when nothing is
-    committed yet: no directory, or a directory holding no data file
-    (the state ``stamp_index_calibration`` leaves before the first
-    batch lands, since the stamp is a hidden non-parquet file). The
-    column names come from one data file's footer, read on the driver
-    (_first_data_footer): no Spark job. Anything else that fails (an
-    unreadable footer) propagates, or it would silently disarm the
-    mixed-layout guard."""
-    meta = _first_data_footer(spark, path)
-    if meta is None:
+    committed yet. Benign failures (ADVICE r13 narrowed them
+    deliberately — anything else must propagate or it would silently
+    disarm the mixed-layout guard): PATH_NOT_FOUND (no directory),
+    and UNABLE_TO_INFER_SCHEMA (directory exists but holds no data
+    files — the state ``stamp_index_calibration`` leaves before the
+    first batch lands, since the stamp is a hidden non-parquet
+    file)."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        cols = spark.read.parquet(path).columns
+    except AnalysisException as e:
+        cond = (
+            getattr(e, "getCondition", None)
+            or getattr(e, "getErrorClass", lambda: None)
+        )()
+        benign = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+        if cond not in benign and not any(b in str(e) for b in benign):
+            raise
         return None
-    names = [f.getName() for f in meta.getSchema().getFields()]
-    return "int8" if SQ8_CODE_COL in names else "float"
+    return "int8" if SQ8_CODE_COL in cols else "float"
 
 
 def materialize_ivf_index(
@@ -1521,11 +1482,14 @@ def ivf_topk_from_index(
     rows are ranked on the driver (r17) and broadcast from a
     driver-local frame that also carries each query's norm. The index
     side stages its norm once per scanned row before the join, so each
-    (query, vector) pair costs one dot fold. The index is read with
-    the schema from a committed file's footer, read on the driver
-    (_read_index), so no schema-inference job runs, and its scan is
-    coalesced to one task per core. The rest is the action's
-    broadcast, shuffle and result jobs: 4 jobs for an 8-query probe."""
+    (query, vector) pair costs one dot fold. The rest is the index
+    read's schema-inference job and the action's broadcast, shuffle
+    and result jobs: 5 jobs for an 8-query probe. The two driver-local
+    frames (centroids, broadcast queries) run no job of their own only
+    while each one's Arrow payload stays below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
+    default; _local_frame); above it each collect of the centroids
+    runs a job as well."""
     if calibration is not None:
         cal = _ann_calibration_section(calibration)
         if nprobe is None:
@@ -1594,7 +1558,7 @@ def ivf_topk_from_index(
             ],
         )
     )
-    index = _read_index(spark, index_path)
+    index = spark.read.parquet(index_path)
     # layout sniff: an SQ8 index (materialize_ivf_index quantize="int8")
     # carries codes instead of floats — cosine is scale-invariant, so
     # the codes score DIRECTLY (no dequantization column, no join to a
@@ -1609,11 +1573,6 @@ def ivf_topk_from_index(
             vec_col,
             norm(F.col(vec_col)).alias("_vn"),
         )
-        # the probed lists are many small files (one per list per
-        # batch), which split into a task per file pair; one task per
-        # core reads them at the same parallelism without paying a
-        # task launch per pair (a no-op when there are fewer splits)
-        .coalesce(spark.sparkContext.defaultParallelism)
         .join(qb, "centroid_id")
         .where(F.col(id_col) != F.col(query_id_col))
         .select(

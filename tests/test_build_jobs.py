@@ -422,10 +422,9 @@ class TestConnectedComponentsJobs:
 
 class TestIvfServeJobs:
     """The IVF serve path runs from driver-local frames: train_centroids
-    returns a LocalRelation, so collecting it runs no job; the index
-    layout and schema come from a footer read on the driver, so a warm
-    append runs only its write, and a warm probe one query collect and
-    its action's jobs."""
+    returns a LocalRelation, so collecting it runs no job; a warm append
+    runs its layout sniff and its write, and a warm probe one query
+    collect, the index's schema inference and its action's jobs."""
 
     DDL = "centroid_id int, centroid_emb array<long>"
 
@@ -464,17 +463,17 @@ class TestIvfServeJobs:
         assert len(rows) == 4
         assert cents.schema == StructType.fromDDL(self.DDL)
 
-    def test_warm_append_runs_only_its_write(self, spark, served):
+    def test_warm_append_at_most_two_jobs(self, spark, served):
         sim, cents, path, batch = served
         fresh = batch(100, 10_000)
         _, n = _count_build_jobs(
             spark, lambda: sim.append_to_ivf_index(fresh, cents, path, 1)
         )
-        assert n == 1, f"warm append ran {n} jobs"
+        assert 0 < n <= 2, f"warm append ran {n} jobs"
 
-    def test_warm_probe_at_most_four_jobs(self, spark, served):
-        """Query collect, and the action's broadcast, shuffle and result
-        jobs. The broadcast side is the driver-built query frame,
+    def test_warm_probe_at_most_five_jobs(self, spark, served):
+        """Query collect, schema inference, and the action's broadcast,
+        shuffle and result jobs. The broadcast side is the driver-built query frame,
         scanned locally (a row-list frame costs the same job count, so
         the plan is checked too)."""
         sim, cents, path, batch = served
@@ -487,7 +486,7 @@ class TestIvfServeJobs:
             return probe, probe.collect()
 
         (probe, rows), n = _count_build_jobs(spark, run)
-        assert 0 < n <= 4, f"warm probe ran {n} jobs"
+        assert 0 < n <= 5, f"warm probe ran {n} jobs"
         assert {r.query_id for r in rows} == set(range(20_000, 20_008))
         plan = probe._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan

@@ -918,45 +918,6 @@ def test_probe_rows_match_inline_cosine_reference(
     assert {300, 301, 302} <= {t[1] for t in got}
 
 
-def test_index_schema_from_footer_matches_inference(
-    spark, adversarial_vectors, adversarial_centroids, tmp_path
-):
-    """The probe and the append's layout guard take the index schema
-    from a committed file's footer, read on the driver, instead of a
-    Spark inference job. The read schema must equal the inferred one
-    for each layout (one-level float, one-level SQ8, appended
-    two-level), and the sniff must see no layout in a missing
-    directory, a stamp-only directory or one whose only data file sits
-    in a hidden staging directory."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    flat, sq8, appended = (
-        str(tmp_path / n) for n in ("flat", "sq8", "appended")
-    )
-    sim.materialize_ivf_index(adversarial_vectors, adversarial_centroids, flat)
-    sim.materialize_ivf_index(
-        adversarial_vectors, adversarial_centroids, sq8, quantize="int8"
-    )
-    sim.append_to_ivf_index(
-        adversarial_vectors, adversarial_centroids, appended, 0
-    )
-    for path, layout in ((flat, "float"), (sq8, "int8"), (appended, "float")):
-        assert sim._read_index(spark, path).schema == (
-            spark.read.parquet(path).schema
-        ), path
-        assert sim.existing_index_layout(spark, path) == layout
-
-    stamped = tmp_path / "stamped"
-    stamped.mkdir()
-    (stamped / sim.ANN_CALIBRATION_STAMP).write_text("{}")
-    staging = tmp_path / "staging" / ".spark-staging-1" / "centroid_id=0"
-    staging.mkdir(parents=True)
-    pq.write_table(pa.table({"emb_q": [[1]]}), str(staging / "part-0.parquet"))
-    for path in ("missing", "stamped", "staging"):
-        assert sim.existing_index_layout(spark, str(tmp_path / path)) is None
-
-
 class TestSQ8Index:
     """Round-13: int8 scalar-quantized IVF index storage (quantize_sq8
     + materialize_ivf_index(quantize="int8")). Cosine is
